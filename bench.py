@@ -233,6 +233,9 @@ def main() -> None:
                 "queries_calm": queries_calm,
                 "value_calm": value_calm,
                 "sf": sf,
+                # the effective core width the numbers were taken at
+                "master": spark.sparkContext.master,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -3920,8 +3920,7 @@ def stats_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-10 wave 2 (registered round 9, first official row round 10; all
-# queued via registry._VERIFY_AFTER).
+# Round-10 wave 2.
 
 # Kruskal-Wallis H: the k-group generalization of stats_mann_whitney,
 # on the SAME exact-doubled-rank chassis — rows collapse to the 50

@@ -80,9 +80,11 @@ def _local_input_bytes(files) -> int | None:
 def explode_partitions(df, factor: int = EXPLODE_FACTOR) -> int:
     """Partition count for an explode-heavy stage, sized from the
     actual input bytes: a scan-sized partition (128 MB) explodes to
-    multi-GB (spill), while tiny corpora shouldn't pay 32-task
-    scheduling overhead per stage. bytes×factor / 64 MB, clamped to
-    [1, 4×parallelism]."""
+    multi-GB (spill). bytes×factor / 64 MB, clamped to
+    [parallelism, 4×parallelism]: the tokenize/explode work is
+    µs-per-row CPU, so even a tiny single-file corpus spreads across
+    every core instead of running the explode and every downstream
+    aggregation in one task."""
     sc = df.sparkSession.sparkContext
     try:
         size = _local_input_bytes(df.inputFiles())
@@ -90,8 +92,8 @@ def explode_partitions(df, factor: int = EXPLODE_FACTOR) -> int:
             size = TARGET_PARTITION_BYTES  # remote storage → assume mid-size
     except Exception:
         size = TARGET_PARTITION_BYTES  # unknown → assume mid-size
-    want = max(1, (size * factor) // TARGET_PARTITION_BYTES)
-    return int(min(want, 4 * sc.defaultParallelism))
+    par = sc.defaultParallelism
+    return int(min(max(par, (size * factor) // TARGET_PARTITION_BYTES), 4 * par))
 
 
 def est_scan_partitions(df) -> int:
@@ -126,9 +128,9 @@ def _distinct_shingles(d, df_cap: int | None = SHINGLE_DF_CAP) -> DataFrame:
 
     Repartition BEFORE the explode when the data calls for it:
     shingling multiplies row count ~24× in bytes, so a scan-sized
-    input partition would explode past memory; conversely a small
-    corpus must not pay wide-shuffle overhead per stage. The count is
-    derived from input bytes (explode_partitions).
+    input partition would explode past memory, while a small corpus
+    still spreads across every core. The count is derived from input
+    bytes (explode_partitions).
 
     ``df_cap`` is the ultra-frequent-shingle cut: a stopword-like
     shingle present in k docs contributes k² candidate pairs to every
@@ -139,13 +141,7 @@ def _distinct_shingles(d, df_cap: int | None = SHINGLE_DF_CAP) -> DataFrame:
     Fixture corpora sit far below the cap (max df 25 at sf0.1), so the
     exact-Jaccard oracles are unaffected; the planted hot-shingle case
     is tests/test_llm_ops.py::test_shingle_df_cap*."""
-    sc = d.sparkSession.sparkContext
-    # CPU floor (optimization r14, guide §2.5/§1.2): tokenize+shingle
-    # is ~µs-per-row CPU work, and at small SFs the byte-derived count
-    # collapses to 1 — a single-task explode stage AND a single-task
-    # index for every consumer aggregation downstream. Floor the
-    # partition count at the core count (bytes still win at scale).
-    npart = max(explode_partitions(d), sc.defaultParallelism)
+    npart = explode_partitions(d)
     if npart > 1:
         d = d.repartition(npart, "doc_id")
     sh = (
@@ -716,16 +712,10 @@ def _simhash_signatures(d: DataFrame) -> DataFrame:
     micro-batch with the identical code. Checkpointed: every consumer
     references the signature subtree at least twice."""
     # Size partitions for the fold's ~10× in-memory expansion (the
-    # (tokens × 64) int8 bit matrix) from actual input bytes, FLOORED
-    # at the core count (optimization r15, the _distinct_shingles
-    # precedent): the md5-per-token transform feeding the fold is
-    # µs-per-row JVM CPU and the byte-derived count collapses to 1 at
-    # fixture scale, serializing the whole signature pass on one task
-    # (re-measured this round: single-task 3–13 s vs 2.1–2.4 s at core
-    # width — the round-9 "single partition wins" measurement predates
-    # the md5 token pipeline). Bytes still win at scale.
-    sc = d.sparkSession.sparkContext
-    npart = max(explode_partitions(d, factor=8), sc.defaultParallelism)
+    # (tokens × 64) int8 bit matrix) from actual input bytes; the
+    # md5-per-token transform feeding the fold is µs-per-row JVM CPU,
+    # so the core-width floor keeps it off a single task.
+    npart = explode_partitions(d, factor=8)
     if npart > est_scan_partitions(d):
         d = d.repartition(npart, "doc_id")
     # NULL text would propagate through split/filter/transform to a
@@ -1014,10 +1004,9 @@ def llm_decontaminate_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
 
     def sh5(df) -> DataFrame:
-        # explode-sizing rule floored at core count (optimization r14,
-        # guide §2.5): the single-file corpus scan otherwise runs the
-        # tokenize+5-gram explode in ONE task
-        npart = max(explode_partitions(df), spark.sparkContext.defaultParallelism)
+        # explode-sizing rule: the single-file corpus scan otherwise
+        # runs the tokenize+5-gram explode in ONE task
+        npart = explode_partitions(df)
         if npart > 1:
             df = df.repartition(npart, "doc_id")
         return (
@@ -1879,11 +1868,10 @@ def llm_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the pair table is at most |sources|² tiny rows.  Top-20 by
     shared count, deterministic tie-break."""
     d = load(spark, sf_dir, "documents")
-    # explode-sizing rule floored at core count (optimization r14,
-    # guide §2.5): the single-file scan otherwise runs the tokenize +
-    # shingle explode — most of this op's cost — in ONE task before
-    # the eager checkpoint
-    npart = max(explode_partitions(d), spark.sparkContext.defaultParallelism)
+    # explode-sizing rule: the single-file scan otherwise runs the
+    # tokenize + shingle explode — most of this op's cost — in ONE
+    # task before the eager checkpoint
+    npart = explode_partitions(d)
     if npart > 1:
         d = d.repartition(npart, "doc_id")
     sh = (

@@ -281,9 +281,9 @@ def llm_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # since md5 is injective on the fixture vocab), array_sort + slice
     # keeps the k smallest (= the QUALIFY rn <= k), and the partial
     # collect_set merges map-side. One exchange total — and it is the
-    # explode-sizing repartition itself, which now also floors at the
-    # core count so single-file corpora tokenize in parallel.
-    npart = max(explode_partitions(d), spark.sparkContext.defaultParallelism)
+    # explode-sizing repartition itself, whose core-width floor makes
+    # single-file corpora tokenize in parallel.
+    npart = explode_partitions(d)
     if npart > 1:
         d = d.repartition(npart, "doc_id")  # parallelize the token explode
     tok = (
@@ -587,20 +587,15 @@ def llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one explode to (doc_id, gram), then two aggregations that
     share the doc_id grouping. At 100 TB the explode multiplies rows
     ~word-count-fold, so it inherits the byte-sized repartition the
-    shingle pipeline uses (explode_partitions) — FLOORED at the core
-    count like _distinct_shingles (optimization r15, guide §2.5: the
-    byte-derived count collapses to 1 on the single-file fixture, so
-    the whole tokenize+explode+double-agg pipeline ran as ONE task —
-    measured 1.13 s vs 0.39 s at core width; bytes still win at
-    scale). Both groupBys hash on doc_id(+gram) and reuse the
-    explicit partitioning — no skew since grams are near-unique per
-    doc."""
+    shingle pipeline uses (explode_partitions, floored at the core
+    count so the single-file fixture does not run the whole
+    tokenize+explode+double-agg pipeline as ONE task). Both groupBys
+    hash on doc_id(+gram) and reuse the explicit partitioning — no
+    skew since grams are near-unique per doc."""
     from spark_lineage_spark.operators.dedup import explode_partitions
 
     d = load(spark, sf_dir, "documents")
-    npart = max(
-        explode_partitions(d), spark.sparkContext.defaultParallelism
-    )
+    npart = explode_partitions(d)
     if npart > 1:
         d = d.repartition(npart, "doc_id")
     g = d.select("doc_id", F.explode(word_shingles(F.col("text"), 2)).alias("gram"))
@@ -1770,7 +1765,7 @@ def llm_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         explode_partitions,
     )
 
-    npart = max(explode_partitions(d), spark.sparkContext.defaultParallelism)
+    npart = explode_partitions(d)
     if npart > est_scan_partitions(d):
         d = d.repartition(npart, "doc_id")
     sh = d.select(
@@ -2296,7 +2291,7 @@ def llm_doc_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         explode_partitions,
     )
 
-    npart = max(explode_partitions(d), spark.sparkContext.defaultParallelism)
+    npart = explode_partitions(d)
     if npart > est_scan_partitions(d):
         d = d.repartition(npart, "doc_id")
     hashes = F.expr(
@@ -5483,10 +5478,7 @@ def llm_watermark_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode-sizing rule, floored at core count); the per-doc agg then
     # reuses that partitioning. At real scale the scan is already
     # parallel and the hint just re-spreads one stage.
-    npart = max(
-        explode_partitions(load(spark, sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-    )
+    npart = explode_partitions(load(spark, sf_dir, "documents"))
     return spark.sql(
         _WATERMARK_SQL.format(
             hint=f"/*+ REPARTITION({npart}, doc_id) */", **_WATERMARK_SPARK

@@ -73,487 +73,11 @@ _OPERATOR_MODULES = [
 ]
 
 
-# Queries that already have a green row in the official driver record
-# (CORRECTNESS_r01.json, which truncated at 50 entries).  The driver
-# appears to verify queries in registry order under a budget, so
-# ``load_all`` enumerates not-yet-driver-verified queries FIRST to get
-# every query an official row across rounds (VERDICT.md round 1, item 1).
-_DRIVER_VERIFIED_ROUNDS_AGO = [
-    # round 1 verified (CORRECTNESS_r01.json): the 43 oldest moved to
-    # _VERIFY_FIRST for the round-11 STALENESS ROTATION; the last 7
-    # (set_* x6, win_topk_per_group) moved there in round 12 — no
-    # round-1-era official rows remain after r12.
-    # round 2/3 verified (CORRECTNESS_r02.json == CORRECTNESS_r03.json)
-    # — the 14 oldest of these moved to _VERIFY_FIRST for the round-12
-    # rotation (join_null_safe_eq .. fn_hash_portable); the remaining
-    # 32 moved to _VERIFY_FIRST for the round-13 rotation, which
-    # COMPLETES the staleness sweep (no pre-round-4 official row left).
-    # udf_pandas_scalar / udf_pandas_grouped_agg / udf_grouped_map_normalize
-    # / udf_map_in_pandas moved to _VERIFY_AFTER: round 6 changed their
-    # rounding semantics (banker's -> HALF_UP), so their r3 records
-    # described the old implementation and they re-verified in round 7.
-    # round 4 verified (CORRECTNESS_r04.json, 50 rows, all green)
-    "stream_tumbling_window", "stream_sliding_window", "stream_session_window",
-    "stream_dedup_watermark", "stream_stream_join", "stream_static_join",
-    "stream_rate_source_window", "stream_stateful_count",
-    "stream_foreach_batch_sink",
-    "source_python_stream",
-    "subq_recursive_cte",
-    "ts_cohort_retention", "ts_concurrency_sweep",
-    "dq_rule_checks", "sql_scripting_control_flow", "cdc_snapshot_diff",
-    "source_python_stream_partitioned",
-    "ts_anomaly_zscore",
-    # ts_resample_ohlc moved to _VERIFY_FIRST (round-12 hardening)
-    "ts_hierarchical_rollup", "win_funnel_ordered",
-
-    # round 5 verified (CORRECTNESS_r05.json, 50 rows, all green)
-    "llm_repeated_passages", "llm_vocab_coverage",
-    "tpch_q4_style_priority_check",
-    "tpch_q6_style_forecast_revenue", "tpch_q8_style_market_share",
-    "tpch_q9_style_product_profit", "tpch_q11_style_important_parts",
-    "tpch_q13_style_order_counts", "tpch_q15_style_top_supplier",
-    "tpch_q16_style_supplier_counts", "tpch_q17_style_small_qty_revenue",
-    "tpch_q20_style_part_shippers", "tpch_q21_style_waiting_suppliers",
-    "llm_text_langid", "llm_text_tokens",
-    "llm_text_tfidf", "llm_text_normalize",
-    "llm_text_top_ngrams", "llm_text_zipf_fit",
-    "llm_pii_redact", "llm_quality_classifier",
-    "llm_doc_length_histogram", "llm_chunk_documents", "llm_pack_sequences",
-    "llm_split_train_val_test", "llm_sample_per_group",
-    "llm_interleave_sources", "llm_source_datacard",
-    "llm_pipeline_end_to_end", "llm_knn_cosine_pandas", "llm_embedding_centroids",
-    "llm_embedding_quantize_calib", "llm_cluster_assign",
-    "llm_embedding_random_projection", "llm_dedup_embedding_cosine",
-    # llm_multimodal_features moved to _VERIFY_FIRST (round-12 hardening)
-    "llm_multimodal_blob",
-    "llm_multimodal_frame_sample", "llm_multimodal_audio_window",
-    # round 6 verified (CORRECTNESS_r06.json, 50 rows: 47 full
-    # triple-match + 3 justified rows-only, 0 failures)
-    "join_asof_directions", "join_band_bucketized", "agg_distinct_kmv", "agg_higher_moments",
-    "agg_correlation_matrix", "set_union_missing_columns",
-    "fn_levenshtein_battery", "fn_mask_redact", "fn_encoding_battery",
-    "fn_format_string_battery", "scan_xml_roundtrip", "scan_binary_files",
-    "llm_perplexity_buckets", "llm_token_cooccurrence", "llm_token_entropy",
-    "llm_ngram_novelty", "llm_rouge_unigram", "llm_preference_pairs", "llm_top_percent_per_source",
-    "ts_markov_transitions", "ts_interpolate_linear",
-    "graph_triangle_copurchase", "ts_rolling_distinct_users", "ts_changepoint_split", "ts_forecast_error",
-    "ts_sequence_pattern", "ts_autocorrelation", "cdc_scd2_build", "ts_twap",
-    "stats_chi_square", "attribution_touch", "agg_gini_concentration",
-    "hist_equi_depth", "graph_pagerank", "graph_degree_stats",
-    "cdc_scd2_incremental", "join_point_in_time_scd2", "sink_python_stream",
-    "llm_ann_lsh",
-    # llm_ann_ivf / llm_ann_ivf_int8 moved to _VERIFY_FIRST: round 11
-    # upgraded both from rows-only to hash-gated (pinned-centroid
-    # oracle), so their old records describe the weaker check type
-    # lineage_catalog_query moved to _VERIFY_FIRST: round 10 upgraded it
-    # from rows-only to oracle-gated (coalesced output_kind, pinned
-    # ordering), so its r6 record describes the old implementation and
-    # it queues for re-verification (the round-6 rounding-change
-    # precedent)
-    "llm_dedup_minhash_ml",
-    # round 7 verified (CORRECTNESS_r07.json)
-    "agg_bitmap_distinct", "agg_hll_two_level",
-    "dq_forget_user_sweep", "fn_aes_roundtrip", "fn_interval_battery",
-    "fn_nested_struct_array", "fn_variant_typed_get", "graph_bfs_khop",
-    "graph_sssp_weighted", "hist_zorder_layout", "join_asof_tolerance",
-    "join_spatial_grid", "llm_ann_int8_rerank", "llm_blocklist_filter",
-    "llm_contrastive_negatives", "llm_dedup_per_domain", "llm_quality_threshold_sweep",
-    "llm_rejection_sampling", "llm_span_corruption", "llm_url_domain_normalize",
-    "obs_observation_metrics", "profile_join_skew", "profile_psi_drift",
-    "sink_table_default_columns", "source_python_pushdown", "sql_execute_immediate",
-    "sql_group_by_all_lateral", "sql_named_parameters", "sql_pipe_syntax",
-    "stats_ks_test", "stats_mann_whitney", "stats_ttest_welch",
-    "stream_checkpoint_recovery", "stream_transform_with_state", "ts_ewma_smoothing", "ts_seasonal_decompose",
-    "ts_session_window_builtin", "ts_user_streaks", "udf_grouped_map_normalize",
-    "udf_map_in_pandas", "udf_pandas_grouped_agg", "udf_pandas_scalar",
-    "udtf_analyze_polymorphic",
-    # round 8 verified (CORRECTNESS_r08.json)
-    "agg_approx_top_k", "agg_filter_clause", "agg_grouping_id",
-    "agg_percentile_within_group", "agg_stack_unpivot", "cdc_scd6",
-    "fn_datetime_construct_battery", "fn_generator_inline", "fn_map_hof_battery",
-    "fn_sql_misc_battery", "fn_string_helpers_battery", "fn_try_collection_access",
-    "fn_variant_explode", "fn_xpath_battery", "hist_zorder_range_probe",
-    "llm_chat_template_flatten",
-    "llm_embedding_drift", "llm_length_bucket_batching",
-    "llm_ngram_backoff_score", "pandas_api_groupby_merge", "scan_ignore_corrupt_files",
-    "scan_modified_after", "scan_nested_schema_pruning", "scan_path_glob_recursive",
-    "sql_distribute_cluster_by", "sql_identifier_clause", "sql_named_window_clause",
-    "sql_tablesample", "sql_transpose", "sql_udf_scalar_table",
-    "stat_crosstab", "stats_ols_two_feature",
-    "stats_theil_sen", "stream_foreach_writer", "stream_observe_metrics",
-    "stream_source_archive_cleanup", "subq_quantified_any_all", "ts_calendar_dim", "udf_arrow_optimized",
-    "udf_pandas_iterator", "udtf_table_argument", "win_funnel_wilson",
-    "win_range_interval_time",
-    # round 9 verified (CORRECTNESS_r09.json)
-    "agg_bitmap_native", "agg_kmv_union", "agg_listagg_distinct",
-    "fn_array_mutation_battery", "fn_ipv4_cidr_battery", "fn_levenshtein_bounded",
-    "fn_luhn_check", "fn_months_between_identities", "fn_regex_extended",
-    "fn_timezone_battery", "fn_to_char_number_roundtrip", "fn_try_url_parse",
-    "fn_utf8_validation", "graph_kcore",
-    # graph_link_prediction moved to _VERIFY_FIRST (ADVICE r10 medium):
-    # round 10 changed its physical plan and result types (hub cap,
-    # packed BIGINT pair key) and round 11 added the collision guard,
-    # so its r9 official record describes a different implementation
-    "join_skyline_pareto", "llm_boilerplate_vocab", "llm_dedup_bloom_prefilter",
-    "llm_deterministic_shuffle", "llm_langid_confusion_matrix", "llm_pack_ffd",
-    "llm_weighted_sample_es", "pandas_api_rolling",
-    "profile_freshness_lag", "profile_join_fanout", "scan_csv_multiline_quotes",
-    "scan_file_metadata_column", "scan_parquet_bloom_filter", "sink_csv_gzip_roundtrip", "sink_partition_overwrite_dynamic", "sink_python_datasource", "sql_rebalance_hints",
-    "sql_session_variables", "stats_anova_oneway", "stats_association_battery",
-    "stats_benford_digits", "stats_bootstrap_ci", "stats_kendall_tau",
-    "stats_kl_divergence", "stats_levene_test", "stats_proportion_ztest",
-    "stats_spearman_corr", "ts_business_days",
-    "ts_holt_linear", "ts_session_window_dynamic_gap",
-    # round 10 verified (CORRECTNESS_r10.json, 50 rows, all green);
-    # lineage_catalog_query and lineage_transitive_closure re-queue in
-    # _VERIFY_FIRST — round 11 changed their implementations (ordering
-    # pinned to the full grouping key; pid-scoped recursion view)
-    "stats_runs_test", "stats_jarque_bera", "stats_fdr_bh",
-    "ts_hampel_outliers", "llm_epoch_allocation", "llm_multimodal_ahash_dedup",
-    "stats_fisher_exact", "pandas_api_resample", "fn_geo_haversine_battery",
-    "llm_judge_agreement", "stats_diff_in_diff", "stats_cuped",
-    "llm_multimodal_ahash", "graph_label_propagation",
-    "ts_sessionize_gap_percentile", "llm_reward_normalize",
-    "stats_kruskal_wallis", "stats_herfindahl",
-    "stats_isotonic_minimax", "graph_hits", "setop_union_by_name",
-    "llm_mmr_diverse_topk", "llm_retrieval_ndcg", "ts_cross_correlation",
-    "pandas_api_pivot_table", "llm_judge_mcnemar",
-    "profile_key_skew", "stats_effect_size", "stats_power_mde",
-    "stats_bayes_ab", "stats_lin_ccc", "llm_embedding_norm_outliers",
-    "stats_cochran_armitage",
-    "scan_parquet_agg_pushdown", "llm_capture_recapture",
-    "stats_wilcoxon_signed_rank", "ts_var_cvar", "llm_vocab_growth_curve",
-    "lineage_column_graph", "lineage_dataset_graph", "lineage_impact_analysis",
-    "lineage_openlineage_export",
-    # round 11 verified (CORRECTNESS_r11.json)
-    "agg_approx_sketches", "agg_collect_listagg", "agg_cube", "agg_global", "agg_grouping_sets",
-    "agg_min_by_max_by", "agg_mode_deterministic", "agg_percentile_median",
-    "agg_pivot", "agg_salted_twophase",
-    "agg_stats", "agg_unpivot_melt", "dedup_by_key_deterministic",
-    "dedup_projected_subset", "distinct_rows", "filter_between_in_like",
-    "filter_compare_bool", "filter_null_semantics", "join_asof", "join_broadcast_dim",
-    "join_cross", "join_full_outer", "join_lateral_topn", "join_left_anti", "join_left_outer",
-    "join_left_semi", "join_range_band", "join_right_outer",
-    "join_self_alias", "join_strategy_hints", "join_theta_nonequi",
-    "lineage_catalog_query", "lineage_streaming_batches", "lineage_table_roundtrip",
-    "lineage_transitive_closure", "llm_ann_ivf", "llm_ann_ivf_int8",
-    "proj_select_compute", "sample_seeded", "win_lag_lead",
-    "win_percent_cume", "win_range_frame", "win_running_moving", "win_value_picks",
-    # round 12 verified (CORRECTNESS_r12.json)
-    "agg_boolean_conditional", "agg_linear_regression", "fn_datetime_battery",
-    "fn_math_battery", "fn_regex_battery", "graph_personalized_pagerank", "join_null_safe_eq", "llm_chat_turn_audit",
-    "llm_cluster_silhouette", "llm_filter_funnel", "llm_hard_negative_mining", "llm_judge_length_bias",
-    "llm_multimodal_features", "llm_multimodal_scene_cut",
-    "llm_ngram_entropy_rate", "llm_repetition_loops", "llm_source_js_divergence",
-    "llm_text_readability", "llm_token_burstiness", "llm_tokenizer_fertility",
-    "pandas_api_ewm", "set_except", "set_except_all",
-    "set_intersect", "set_intersect_all", "set_union_all",
-    "set_union_distinct", "sort_nulls_placement", "sort_offset",
-    "sort_rank_materialized", "sort_topk", "stats_holm_bonferroni",
-    "stats_krippendorff_alpha", "stats_mutual_info", "ts_bollinger_bands",
-    "ts_calendar_profile", "ts_granger_causality", "ts_mann_kendall",
-    "ts_pacf", "ts_resample_ohlc", "ts_rolling_correlation",
-    "ts_seasonal_mann_kendall", "ts_seasonal_strength", "ts_stl_anomaly",
-    "win_ignore_nulls", "win_topk_per_group",
-    # round 13 verified (CORRECTNESS_r13.json)
-    "catalog_temp_view", "fn_array_battery", "fn_array_explode",
-    "fn_bitwise_battery", "fn_cast_battery", "fn_collation_battery",
-    "fn_conditional_battery", "fn_explode_outer_nulls", "fn_hash_portable",
-    "fn_hash_spark_native", "fn_json_battery", "fn_map_battery",
-    "fn_rounding_modes", "fn_string_spark_native", "fn_struct_battery",
-    "fn_try_arithmetic", "fn_url_battery", "fn_variant_json",
-    "graph_assortativity", "graph_modularity", "join_bucketed_colocated",
-    "llm_heaps_law_fit", "llm_ngram_kneser_ney", "scan_csv_roundtrip",
-    "scan_json_roundtrip", "scan_orc_roundtrip", "scan_parquet_pushdown",
-    "scan_text_roundtrip", "sink_parquet_partitioned", "source_jdbc_roundtrip",
-    "source_python_datasource", "stats_auc_pr", "stats_calibration_brier",
-    "stats_cronbach_alpha", "stats_hodges_lehmann",
-    "stats_permutation_test", "stats_roc_auc", "stats_tost_equivalence",
-    "ts_hurst_exponent", "ts_ljung_box", "ts_periodogram",
-    "ts_theil_u", "udf_cogroup_in_pandas", "udf_map_in_arrow",
-    "udf_scalar_python", "udtf_split_words",
-    # round 14 verified (CORRECTNESS_r14.json)
-    "graph_rich_club", "join_aqe_skew_handled", "join_dynamic_partition_pruning",
-    "join_interval_overlap", "join_runtime_bloom_filter", "join_skew_salted",
-    "llm_bpe_pair_counts", "llm_dedup_keep_best", "llm_mixture_weights",
-    "llm_ngram_lm_score", "llm_selfbleu_diversity", "llm_watermark_detect",
-    "merge_upsert_latest", "profile_column_stats", "sample_hash_deterministic",
-    "scan_csv_corrupt_records", "scan_parquet_schema_evolution", "sink_table_saveastable",
-    "stats_cmh_test", "stats_cochran_q", "stats_dunn_test",
-    "stats_friedman_test", "stats_jonckheere_terpstra", "stats_kaplan_meier",
-    "stats_logrank_test", "stats_page_trend", "stats_sign_test",
-    "stats_xi_correlation", "subq_exists_not_in", "subq_scalar_correlated",
-    "tpch_q10_style_returned_items", "tpch_q12_style_late_lines", "tpch_q14_style_promo_revenue",
-    "tpch_q18_style_large_orders", "tpch_q19_style_disjunctive", "tpch_q1_style_full",
-    "tpch_q22_style_idle_customers", "tpch_q2_style_min_cost_supplier", "tpch_q3_style_shipping_priority",
-    "tpch_q5_style_regional_volume", "tpch_q7_style_nation_volume", "ts_cusum_drift",
-    "ts_dickey_fuller", "ts_gap_fill_spine", "ts_page_hinkley",
-    "ts_sample_entropy", "ts_sessionize_batch", "ts_spectral_coherence",
-    "ts_variance_ratio", "udf_apply_in_arrow",
-]
-
-# Among the not-yet-verified queries, run these FIRST.
-#
-# ROTATION POLICY (round 11 onward, VERDICT r10 item 1): with the full
-# registry officially covered and _VERIFY_AFTER drained, the ~50-row
-# per-round driver budget funds a STALENESS ROTATION — each round
-# re-verifies (a) any query whose implementation or shared helpers
-# changed since its last official row (the round-6 rounding-change
-# precedent), then (b) the queries with the OLDEST official records.
-# 142 rows date from rounds 1-3, before the round-5-8 helper rewrites
-# (grouped_rank, shingle vectorization, session confs); they rotate
-# oldest-first, ~45-48 per round, so the official record converges to
-# at-most-3-rounds stale.  New registrations take budget ahead of the
-# rotation (growth stays behind freshness only when slots run out —
-# then they go to _VERIFY_AFTER, driver-sim green required).
-# tools/stage_rotation.py prints the stalest unstaged names ready to
-# paste here; tools/promote_verified.py retires the previous round's
-# green rows first.
-#
-# Round 11 = 2 new lineage registrations + 3 changed-implementation
-# re-verifies + 2 rows-only -> hash-gated oracle upgrades + the 43
-# oldest round-1 rows (r01 list order).
-#
-# Round 13 staging note: the 16 round-12 registrations + 2 displaced
-# battery rows in _VERIFY_AFTER (18) take the front of the round-13
-# budget; the remaining 32 round-3-vintage rotation rows
-# (stage_rotation.py prints them) fill the rest: 18 + 32 = 50 exactly,
-# and the staleness rotation COMPLETES in round 13 (no official row
-# older than round 4 afterward).
-#
-# Round 12 = the 29 round-11 registrations from _VERIFY_AFTER (each
-# driver-sim green at sf0.01 at registration, each with a property
-# test; growth-ahead-of-rotation rule — 2 of them,
-# ts_seasonal_strength and llm_judge_length_bias, additionally carry
-# round-12 ADVICE fixes, re-driver-simmed green) + the 21 stalest
-# rotation rows (the last 7 round-1-era rows, then the 14 oldest
-# round-3 rows, stage_rotation.py order).  29 + 21 = 50 = the budget.
-#
-# Round 13 = the 18 queued _VERIFY_AFTER rows (2 displaced battery
-# rotations + the 16 round-12 registrations; stats_cronbach_alpha /
-# stats_calibration_brier / stats_tost_equivalence additionally carry
-# round-13 ADVICE fixes, re-driver-simmed green) + the 32 remaining
-# round-3-vintage rotation rows (stage_rotation.py order).
-# 18 + 32 = 50 = the budget, and the STALENESS ROTATION COMPLETES:
-# after this round no official row predates round 4.
-# stats_ttest_welch's r13 ADVICE fix (DECIMAL(19,0) factor casts) is
-# bit-identical at every shipped SF (max |value| ~560 => squares fit
-# int64 with 30x headroom; exact integer arithmetic both before and
-# after), so its round-9 official row remains valid — no re-verify
-# slot spent (unlike the r12 OHLC/multimodal hardening, which could
-# move the last rounded decimal).
-# Round 14 = the 19 queued _VERIFY_AFTER rows (18 round-13
-# registrations + the llm_mixture_weights re-verify), then
-# ts_cusum_drift / stats_friedman_test (round-14 ADVICE hardening:
-# DECIMAL(19,0) factor casts in the cusum calibration, df-derived
-# chi2 critical value in friedman — values bit-identical at shipped
-# SFs but the SQL changed, so the official rows are re-earned), then
-# the 29 stalest round-4 rotation rows (stage_rotation.py order) so
-# no official row ages past ~10 rounds.  19 + 2 + 29 = 50 = budget.
-#
-# Round 15 = the REWRITE RE-VERIFICATION DRAIN (VERDICT r14 item 2:
-# the round-14 optimization rewrites were driver-sim + equivalence-test
-# green but only 5 of ~30 landed in r14's official sample; the
-# round-10/11 "changed implementations re-queue" precedent applies).
-# 44 re-verifies pulled back out of _DRIVER_VERIFIED_ROUNDS_AGO:
-# the r14 plan-level rewrites (win_ranking, agg_count_distinct,
-# llm_text_fingerprint, embeddings/BT/CMS/winnowing, knn, the
-# est_scan_partitions consumers), the whole dedup substrate + its 9
-# consumer queries (round-15 additionally changed the verify-stage
-# broadcast structure and the band-signature view), the grouped_kth
-# lazy-checkpoint family, the round-15 operator changes
-# (stream_update_mode_agg, sink_max_records_per_file,
-# llm_bpe_apply_merges, stat_df_battery, scan_text_wholetext,
-# graph_link_prediction, llm_semantic_dedup), and the r14 sql-text
-# builder conversions (identical plans, rows re-earned anyway).
-# + 6 promoted from _VERIFY_AFTER (graph_local_clustering — r15-touched
-# AND never officially verified — pandas_api_merge_asof's changed
-# implementation, then the 4 oldest queued wave ops).
-# 44 + 6 = 50 = the budget; the remaining 26 wave registrations stay
-# queued in _VERIFY_AFTER for the next official sample.
-_VERIFY_FIRST = [
-    "win_ranking",
-    "agg_count_distinct",
-    "llm_text_fingerprint",
-    "llm_dedup_minhash_lsh",
-    "llm_dedup_ngram_jaccard",
-    "llm_dedup_edit_distance",
-    "llm_embedding_top_pc",
-    "llm_embedding_abtt",
-    "llm_bradley_terry",
-    "agg_count_min_sketch",
-    "llm_winnowing_fingerprint",
-    "llm_decontaminate_benchmark",
-    "llm_doc_hash_embedding",
-    "llm_source_overlap_matrix",
-    "cdc_json_envelope_apply",
-    "llm_knn_cosine_exact",
-    "llm_dedup_simhash",
-    "stream_dedup_simhash",
-    "llm_bigram_pmi",
-    "llm_dedup_clusters",
-    "llm_dedup_containment",
-    "llm_dedup_cross_corpus",
-    "llm_dedup_threshold_sweep",
-    "llm_dedup_incremental",
-    "llm_dedup_persistent_index",
-    "llm_minhash_band_sweep",
-    "llm_dedup_index_compaction",
-    "llm_dedup_set_containment",
-    "agg_median_abs_deviation",
-    "agg_trimmed_winsorized",
-    "agg_weighted_median",
-    "stream_update_mode_agg",
-    "sink_max_records_per_file",
-    "llm_bpe_apply_merges",
-    "stat_df_battery",
-    "scan_text_wholetext",
-    "graph_link_prediction",
-    "llm_semantic_dedup",
-    "flagship_pricing_join",
-    "join_inner_equi",
-    "agg_rollup",
-    "llm_dedup_exact",
-    "llm_text_quality",
-    # fn_string_battery (sql-text conversion; judge-verified identical
-    # plan, lowest-information re-verify of the staged set) returned
-    # to the rotation queue: llm_text_repetition gained the core-width
-    # explode floor in the round-15 second pass — changed
-    # implementations re-earn rows first.
-    "llm_text_repetition",
-    "graph_local_clustering",
-    "pandas_api_merge_asof",
-    # ts_turning_points (pure rotation, unchanged implementation)
-    # returned to _VERIFY_AFTER: stream_chained_stateful's flush
-    # sentinel is now a JVM-literal row (identical values; the
-    # createDataFrame local relation paid a ~6 s handshake per file
-    # write) — the changed op re-earns its row first. The two outer
-    # stream-stream joins share the same sentinel change in their
-    # once-per-fixture staging and queue at the front of
-    # _VERIFY_AFTER (their staged fixture VALUES are identical and
-    # both were oracle-exact at 2 SFs after the change).
-    "stream_chained_stateful",
-    # ts_permutation_entropy returned to _VERIFY_AFTER:
-    # stats_ad_two_sample changed implementation in the round-15
-    # second pass (literal-scalar close + fused harmonic job) and a
-    # changed op must carry an official post-change row ahead of a
-    # queued unchanged wave op.
-    "stats_ad_two_sample",
-    # ts_kpss_test returned to _VERIFY_AFTER: agg_median_abs_deviation
-    # (already staged above) and llm_multimodal_alignment both changed
-    # implementation in the round-15 second pass (cents-as-long
-    # deviation arithmetic; explode+conditional-sum text fold), and
-    # changed implementations take budget ahead of queued wave ops.
-    "llm_multimodal_alignment",
-    "scan_partition_values_typed",
-]
-
-# ... and run these LAST among the unverified: rows-only checks (weaker
-# rows) — they cost driver seconds for a weaker record, so oracle-bearing
-# queries go first.
-_VERIFY_LAST = []
-
-# Queries whose first official row should wait for a later round (used
-# when the driver's per-round budget is already fully allocated above).
-# New registrations beyond the ~50-row budget go here (driver-sim
-# green required at registration time).
-# pandas_api_cut_qcut was investigated for round 13 and dropped:
-# ps.cut / ps.qcut exist in pyspark.pandas 4.1 but raise
-# PandasNotImplementedError ("The method `pd.cut()` is not
-# implemented yet"), and the binning SEMANTICS are already covered
-# by hist_equi_depth (qcut) and the width_bucket battery (cut).
-# llm_dataset_temperature_mix dropped as a duplicate of
-# llm_mixture_weights (same p^alpha reweighting, already official).
-_VERIFY_AFTER = [
-    # round-14 registrations still past the budget (each driver-sim
-    # green at sf0.01 at registration, each with a numpy replay
-    # property test): round 15's 50 slots went to the rewrite
-    # re-verification drain (see the _VERIFY_FIRST note), which takes
-    # precedence per the changed-implementation-first rotation rule —
-    # these queue for the next official sample. stats_brunner_munzel
-    # returned here when scan_partition_values_typed (changed this
-    # round) took its staged slot; ts_kpss_test returned when
-    # llm_multimodal_alignment (changed in the round-15 second pass)
-    # took its slot.
-    # Front of the queue: r15-second-pass changed implementations
-    # past the 50 budget (sentinel staging; PQ self-norm precompute —
-    # Spark output proved bit-identical by test) + the displaced
-    # rotation rows.
-    "stream_stream_left_outer_join",
-    "llm_ann_pq_adc",
-    "stream_stream_full_outer_join",
-    "fn_string_battery",
-    "ts_turning_points",
-    "ts_kpss_test",
-    "stats_brunner_munzel",
-    "stats_cvm_two_sample",
-    "stats_ansari_bradley",
-    "stats_mood_median",
-    "stats_bartlett_test",
-    "stats_poisson_dispersion",
-    "ts_adf_augmented",
-    "ts_spectral_entropy",
-    "stats_theil_inequality",
-    "ts_cusum_squares",
-    # changed implementation (round-14 sweep finding: ps.merge_asof's
-    # _joinAsOf rewrite is a quadratic BroadcastNestedLoopJoin that
-    # hangs at sf0.1; respelled via the linear union+groupby-ffill
-    # pandas idiom), so its round-4 official row describes the old
-    # plan — re-verifies round 15 (the llm_mixture_weights precedent)
-    # round-14 wave 6 (registered after the sweep commit; driver-sim
-    # green at sf0.01 at registration, numpy replay + textbook pins)
-    "stats_durbin_watson",
-    "stats_breusch_pagan",
-    "ts_hjorth_parameters",
-    # round-14 wave 7
-    "ts_higuchi_fd",
-    "ts_dfa",
-    "stats_quade_test",
-    # round-14 wave 8 (stats_ad_two_sample promoted to _VERIFY_FIRST:
-    # changed implementation in the round-15 second pass;
-    # ts_permutation_entropy displaced back here by that promotion)
-    "ts_permutation_entropy",
-    "ts_haar_energy",
-    # round-14 wave 9
-    "stats_hotelling_t2",
-    "stats_energy_distance",
-    "stats_mahalanobis_outliers",
-    # round-14 wave 10
-    "stats_distance_correlation",
-    "stats_lepage_test",
-    # round-14 wave 11
-    "ts_var_stability",
-    "stats_pca_closed_form",
-    # round-14 wave 12
-    "ts_bds_test",
-    "stats_cucconi_test",
-]
-
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every operator module so registrations run.
-
-    Returns the registry ordered with queries that still lack an
-    official driver-correctness row first (see
-    ``_DRIVER_VERIFIED_ROUNDS_AGO``), then the already-verified ones in
-    registration order.
-    """
+    """Import every operator module so registrations run; returns the
+    registry in registration order."""
     import importlib
 
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # only tolerate the module (or its package) not existing yet
-            if e.name is None or not mod.startswith(e.name):
-                raise
-    seen = set(_DRIVER_VERIFIED_ROUNDS_AGO)
-    explicit = set(_VERIFY_FIRST) | set(_VERIFY_LAST) | set(_VERIFY_AFTER)
-    ordered = {n: QUERIES[n] for n in _VERIFY_FIRST if n in QUERIES}
-    ordered.update(
-        {n: s for n, s in QUERIES.items() if n not in seen and n not in explicit}
-    )
-    ordered.update({n: QUERIES[n] for n in _VERIFY_LAST if n in QUERIES})
-    ordered.update({n: QUERIES[n] for n in _VERIFY_AFTER if n in QUERIES})
-    ordered.update({n: QUERIES[n] for n in _DRIVER_VERIFIED_ROUNDS_AGO if n in QUERIES})
-    return ordered
+        importlib.import_module(mod)
+    return dict(QUERIES)

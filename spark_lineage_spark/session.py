@@ -2,11 +2,14 @@
 
 The reference registers a JVM ``QueryExecutionListener`` via the static
 conf ``spark.sql.queryExecutionListeners`` (SURVEY.md §0; the mechanism
-is verified Spark behavior — pyspark/sql/tests/test_listener.py). A
-Python listener cannot be plugged into that JVM hook, so this engine
-captures lineage at the facade boundary instead: ``LineageSession``
-wraps ``SparkSession`` and emits a report per executed action/write by
-walking the analyzed logical plan (SURVEY.md §3.1 step 4).
+is verified Spark behavior — pyspark/sql/tests/test_listener.py). That
+static conf only takes JVM class names, so it is out of reach from
+Python; a py4j-callback listener registered at runtime through
+``spark._jsparkSession.listenerManager().register(...)`` does receive
+``onSuccess``/``onFailure``. This engine captures lineage at the facade
+boundary instead: ``LineageSession`` wraps ``SparkSession`` and emits a
+report per executed action/write by walking the analyzed logical plan
+(SURVEY.md §3.1 step 4).
 """
 
 from __future__ import annotations

@@ -221,6 +221,18 @@ def test_multimodal_stub_marks_non_text(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
+def test_explode_partitions_floors_at_core_width(spark):
+    """A tiny single-file corpus still explodes across every core: the
+    byte-derived count alone would be 1 at sf0.001."""
+    from spark_lineage_spark.operators.dedup import explode_partitions
+    from spark_lineage_spark.tables import load
+
+    par = spark.sparkContext.defaultParallelism
+    docs = load(spark, SF, "documents")
+    assert par <= explode_partitions(docs) <= 4 * par
+    assert par <= explode_partitions(docs, factor=8) <= 4 * par
+
+
 def test_shingle_df_cap_bounds_candidates(spark):
     """Planted hot shingle: one 3-gram shared by all 8 docs would alone
     generate 8*7/2 = 28 candidate meetings in the inverted-index

@@ -1,19 +1,14 @@
 """Registry hygiene: cheap guards that catch contract breakage without
 spinning Spark — every oracle must BIND in DuckDB against the fixture
-schemas, and the driver-ordering lists must only name real queries
-(a typo there silently reorders the verification budget).
+schemas, the registry enumerates in registration order with every name
+exactly once, and the ``__spark_entry__`` contract exposes exactly that
+registry.
 """
 
 import duckdb
 import pytest
 
-from spark_lineage_spark.registry import (
-    _DRIVER_VERIFIED_ROUNDS_AGO,
-    _VERIFY_AFTER,
-    _VERIFY_FIRST,
-    _VERIFY_LAST,
-    load_all,
-)
+from spark_lineage_spark.registry import QUERIES, load_all, query
 from spark_lineage_spark.tables import TABLES
 
 SF = "/root/testdata/sf0.001"
@@ -42,29 +37,26 @@ def test_all_oracles_bind_in_duckdb(con):
     assert not failures, failures
 
 
-def test_ordering_lists_name_real_queries():
-    known = set(load_all())
-    for lst, label in [
-        (_DRIVER_VERIFIED_ROUNDS_AGO, "_DRIVER_VERIFIED_ROUNDS_AGO"),
-        (_VERIFY_FIRST, "_VERIFY_FIRST"),
-        (_VERIFY_LAST, "_VERIFY_LAST"),
-        (_VERIFY_AFTER, "_VERIFY_AFTER"),
-    ]:
-        unknown = [n for n in lst if n not in known]
-        assert not unknown, f"{label} names unknown queries: {unknown}"
-        assert len(set(lst)) == len(lst), f"{label} has duplicates"
+def test_load_all_is_registration_order():
+    specs = load_all()
+    assert list(specs) == list(QUERIES)
+    assert all(name == spec.name for name, spec in specs.items())
 
 
-def test_ordering_lists_disjoint():
-    first, last = set(_VERIFY_FIRST), set(_VERIFY_LAST)
-    after = set(_VERIFY_AFTER)
-    seen = set(_DRIVER_VERIFIED_ROUNDS_AGO)
-    assert not (first & last) and not (first & after) and not (last & after)
-    # a verified query needs no placement in any priority list (a
-    # query queued for RE-verification moves out of the verified list)
-    assert not (first & seen), first & seen
-    assert not (last & seen), last & seen
-    assert not (after & seen), after & seen
+def test_entry_contract_matches_registry():
+    import __spark_entry__ as E
+
+    specs = load_all()
+    assert list(E.queries()) == list(specs)
+    assert set(E.oracle_sql()) == {n for n, s in specs.items() if s.oracle is not None}
+
+
+def test_duplicate_query_name_raises():
+    name = next(iter(load_all()))
+    before = QUERIES[name]
+    with pytest.raises(ValueError, match="duplicate query name"):
+        query(name, "dup")(lambda spark, sf_dir: None)
+    assert QUERIES[name] is before
 
 
 def test_evict_cache_caps_same_app_entries():
@@ -90,34 +82,3 @@ def test_evict_cache_caps_same_app_entries():
     # oldest same-app keys evicted first
     assert ("app", "sf0") not in cache and ("app", f"sf{STAGED_CACHE_CAP + 2}") in cache
 
-
-def test_driver_budget_lands_on_the_50_unrecorded():
-    """The names load_all() yields ahead of the already-verified tail
-    must start with exactly _VERIFY_FIRST.  After the round-14-start
-    promotion (tools/promote_verified.py over CORRECTNESS_r13.json) the
-    official record covers 490 of 508 queries; the unverified head is
-    the staged 50 (19 round-13 _VERIFY_AFTER deferrals + 2 round-14
-    ADVICE-hardened re-verifies + 29 round-4 rotation rows) plus any
-    round-14 registrations — at most 50, the driver's per-round budget;
-    overflow registrations are explicitly deferred via _VERIFY_AFTER
-    (they enumerate after the in-budget block, verifying next
-    round)."""
-    names = list(load_all())
-    assert names[: len(_VERIFY_FIRST)] == _VERIFY_FIRST
-    unverified = [n for n in names if n not in set(_DRIVER_VERIFIED_ROUNDS_AGO)]
-    in_budget = [n for n in unverified if n not in set(_VERIFY_AFTER)]
-    assert len(in_budget) <= 50, (
-        f"{len(in_budget)} unverified queries exceed the driver's 50-row "
-        f"budget: {in_budget}"
-    )
-    # deferred names enumerate after every in-budget unverified name
-    pos = {n: i for i, n in enumerate(names)}
-    if in_budget and _VERIFY_AFTER:
-        assert max(pos[n] for n in in_budget) < min(pos[n] for n in _VERIFY_AFTER)
-    # every unverified name enumerates before every verified one
-    verified_positions = [
-        i for i, n in enumerate(names) if n in set(_DRIVER_VERIFIED_ROUNDS_AGO)
-    ]
-    first_verified = verified_positions[0] if verified_positions else len(names)
-    assert all(n not in set(_DRIVER_VERIFIED_ROUNDS_AGO) for n in names[:first_verified])
-    assert set(names[:first_verified]) == set(unverified)
