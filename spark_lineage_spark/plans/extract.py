@@ -1,11 +1,15 @@
-"""Lineage extraction: walk the analyzed Catalyst plan via py4j.
+"""Lineage extraction: read the analyzed Catalyst plan as JSON and walk
+it in Python.
 
 Both engine entry points (SQL string, DataFrame API) converge on the
 same analyzed logical plan (SURVEY.md §3), so extraction is a read-only
-tree walk — zero extra Spark jobs. The walk is version-coupled to the
-installed PySpark (4.1.2, classic mode); every JVM call is guarded and
-the extractor degrades to ``df.inputFiles()`` rather than failing the
-user's query.
+tree walk — zero extra Spark jobs. The plan crosses py4j once, as JSON
+(``_plan_json``), and the walk runs in Python; py4j calls remain only
+for what the JSON drops (leaf relation metadata and field types,
+write-command targets, ``LogicalRDD`` rdd ids), so they grow with the
+number of leaves, not with plan size. Version-coupled to the installed
+PySpark (4.1.2, classic mode); on any failure the extractor degrades to
+``df.inputFiles()`` rather than failing the user's query.
 
 Collected per report:
 - inputs: leaf relations — file-based (``LogicalRelation`` over
@@ -19,9 +23,12 @@ Collected per report:
 
 from __future__ import annotations
 
+import functools
+import json
 import re
 from typing import Any, Optional
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 from spark_lineage_spark.plans.model import (
@@ -38,21 +45,13 @@ from spark_lineage_spark.plans.model import (
 
 # localCheckpoint() truncates the analyzed plan to a LogicalRDD leaf, so
 # a checkpointed DataFrame would report "read nothing" (Spark itself has
-# forgotten). ``lineage_checkpoint`` snapshots the pre-checkpoint plan's
-# inputs + column sources keyed by the checkpoint RDD's id; the walk
-# splices them back in when it meets that LogicalRDD. Bounded: LRU —
-# only the least-recently-USED entry is evicted past _CHECKPOINT_CAP
-# (clearing the whole dict dropped entries for checkpoints still
-# referenced by live DataFrames, e.g. dedup's iterative checkpoints
-# within one long session, silently degrading their later extraction
-# to an unknown leaf — ADVICE r5). A session-lifetime cache of tiny
-# metadata, not data; _resolve_checkpoint_entry re-inserts on every
-# access, so dict order is recency order and eviction pops the stalest
-# entry, never a hot one.
-# (application id, rdd id) -> analyzed-plan jobj (unresolved) |
-# (inputs, colmap) | None. RDD ids restart at 0 per SparkContext, so a
-# bare-id key would splice a previous session's lineage into a new one
-# (the applicationId-scoping rule _SHINGLE_INDEX_CACHE follows).
+# forgotten). ``lineage_checkpoint`` keeps the pre-checkpoint plan keyed
+# by (application id, checkpoint RDD id) — RDD ids restart at 0 per
+# SparkContext — and the walk splices its inputs and column sources back
+# in when it meets that LogicalRDD. Value: the analyzed-plan jobj until
+# first use, then (inputs, colmap), or None. Bounded LRU: every access
+# re-inserts the entry, so eviction past _CHECKPOINT_CAP pops the
+# least-recently-used one, never a checkpoint still in use.
 _CHECKPOINT_LINEAGE: dict[tuple[str, int], Any] = {}
 _CHECKPOINT_CAP = 512
 
@@ -63,17 +62,16 @@ def lineage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     Records the pre-checkpoint inputs and per-output-column source sets
     under the checkpoint RDD's id so later extraction over the
     truncated plan still reports the original tables/columns. Costs
-    one plan walk (~tens of ms) per checkpoint; never fails the query.
+    one plan walk, the first time a report reads through the
+    checkpoint; never fails the query.
     Chain-friendly: ``df.transform(lineage_checkpoint)`` (or
     ``lineage_checkpoint_lazy`` for ``eager=False``).
     """
     ckpt = df.localCheckpoint(eager)
     try:
-        # store the analyzed-plan REFERENCE only; the (possibly
-        # expensive, seconds on explode-heavy plans) extraction walk
-        # runs lazily, the first time lineage is actually requested
-        # for a plan containing this checkpoint — operators running
-        # outside a lineage context never pay it
+        # store the analyzed-plan REFERENCE only; the walk runs the
+        # first time a report reads through this checkpoint, so
+        # operators running outside a lineage context never pay it
         analyzed = df._jdf.queryExecution().analyzed()
         rid = ckpt._jdf.queryExecution().analyzed().rdd().id()
         app = df.sparkSession.sparkContext.applicationId
@@ -87,13 +85,8 @@ def lineage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
 def _resolve_checkpoint_entry(key: tuple[str, int]):
     """Resolve (and memoize) a checkpoint's recorded lineage: a stored
-    plan reference becomes (inputs, colmap) on first use.
-
-    Every access re-inserts the entry at the dict's end (LRU
-    touch-on-access): a hot long-lived checkpoint — e.g. the
-    session-lifetime shingle index reused by every dedup query — stays
-    at the young end and is never the eviction victim, which pure
-    creation-order FIFO would make it."""
+    plan reference becomes (inputs, colmap) on first use. Every access
+    re-inserts the entry at the dict's end (LRU touch-on-access)."""
     if key not in _CHECKPOINT_LINEAGE:
         return None
     entry = _CHECKPOINT_LINEAGE.pop(key)
@@ -115,45 +108,195 @@ def lineage_checkpoint_lazy(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# small py4j helpers (Scala collections -> Python)
+# the plan as a JSON tree
 # ---------------------------------------------------------------------------
+
+# A py4j reply above ~8 KiB stalls a flat ~45 ms (the gateway socket has
+# TCP_NODELAY off); 4,000 chars of ASCII stay under 8 KiB even if every
+# char were a backslash that py4j escapes to two.
+_CHUNK = 4000
+# (gateway view, (Jackson writer, StringWriter, DataType)): looked up
+# once per gateway, as each py4j class lookup is a reflection round-trip
+_GATEWAY: list = [None, None]
+
+
+def _classes():
+    jvm = SparkContext._jvm
+    if _GATEWAY[0] is not jvm:
+        mapper = getattr(getattr(jvm.org.json4s.jackson, "JsonMethods$"), "MODULE$").mapper()
+        escape = getattr(jvm.com.fasterxml.jackson.core, "JsonGenerator$Feature").ESCAPE_NON_ASCII
+        writer = getattr(mapper.writer(), "with")(escape)
+        _GATEWAY[:] = [jvm, (writer, jvm.java.io.StringWriter, jvm.org.apache.spark.sql.types.DataType)]
+    return _GATEWAY[1]
+
+
+def _plan_json(plan) -> str:
+    """``plan.toJSON()``, read back in ``_CHUNK``-char replies.
+
+    Jackson writes the text with non-ASCII escaped (``\\uXXXX``), so it
+    is pure ASCII and no chunk boundary can split a surrogate pair."""
+    writer, string_writer, _ = _classes()
+    out = string_writer()
+    writer.writeValue(out, plan.jsonValue())
+    buf = out.getBuffer()
+    n = buf.length()
+    return "".join(buf.substring(i, min(i + _CHUNK, n)) for i in range(0, n, _CHUNK))
+
+
+class _Node:
+    """A plan node of the JSON tree. ``jvm()`` gives its JVM object on
+    first use: a leaf's from the root's ``collectLeaves()`` (one call
+    for all leaves), any other node's from its parent's children."""
+
+    __slots__ = ("js", "name", "kids", "jvm", "out")
+
+    def __init__(self, js: dict, jvm):
+        self.js, self.jvm, self.kids, self.out = js, jvm, [], None
+        self.name = js["class"].rsplit(".", 1)[-1]
+
+
+def _tree(nodes: list, jvm) -> _Node:
+    """Link a pre-order ``jsonValue`` list into a tree of ``_Node``s;
+    ``jvm`` returns the root's JVM object."""
+    jvm = functools.cache(jvm)
+    leaves = functools.cache(lambda: jvm().collectLeaves())
+    root, open_nodes, n_leaves = None, [], 0
+    for js in nodes:
+        if not open_nodes:
+            node = root = _Node(js, jvm)
+        else:
+            parent = open_nodes[-1]
+            if js["num-children"]:
+                def get(p=parent.jvm, i=len(parent.kids)):
+                    return p().children().apply(i)
+            else:
+                def get(i=n_leaves):
+                    return leaves().apply(i)
+            node = _Node(js, functools.cache(get))
+            parent.kids.append(node)
+            if len(parent.kids) == parent.js["num-children"]:
+                open_nodes.pop()
+        if js["num-children"]:
+            open_nodes.append(node)
+        else:
+            n_leaves += 1
+    return root
+
+
+_EXPRESSIONS = "org.apache.spark.sql.catalyst.expressions."
+_ATTRIBUTE = _EXPRESSIONS + "AttributeReference"
+
+
+def _children(node: _Node) -> list[_Node]:
+    """Children, then ``subqueries()``: the ``plan`` of every subquery
+    expression in the node's expression fields, in field order."""
+    plans: list = []
+
+    def scan(value):
+        if not isinstance(value, list) or not value:
+            return
+        if not isinstance(value[0], dict):
+            for v in value:
+                scan(v)
+        elif value[0].get("class", "").startswith(_EXPRESSIONS):
+            plans.extend(e["plan"] for e in value if isinstance(e.get("plan"), list) and e["plan"])
+
+    for v in node.js.values():
+        scan(v)
+    return node.kids + [
+        _tree(p, lambda k=k: node.jvm().subqueries().apply(k)) for k, p in enumerate(plans)
+    ]
 
 
 def _seq(jseq) -> list:
     return [jseq.apply(i) for i in range(jseq.size())]
 
 
-def _iter_attr_set(jset) -> list:
-    it = jset.iterator()
-    out = []
-    while it.hasNext():
-        out.append(it.next())
-    return out
+def _eid(attr: dict) -> int:
+    return attr["exprId"]["id"]
 
 
-def _cls(node) -> str:
-    return node.getClass().getSimpleName()
+def _refs(expr: list) -> set[int]:
+    """``Expression.references``: the AttributeReferences of the flat
+    expression list (nested plans, e.g. of subqueries, are not entered)."""
+    return {_eid(e) for e in expr if e["class"] == _ATTRIBUTE}
 
 
-def _fields_of(node) -> list[FieldInfo]:
-    out = []
+# nodes whose output attributes are their first child's
+_PASS_THROUGH = {
+    "Filter", "Sort", "SubqueryAlias", "View", "Distinct", "GlobalLimit", "LocalLimit",
+    "Offset", "Tail", "Sample", "Repartition", "RepartitionByExpression",
+    "RebalancePartitions", "ResolvedHint", "Deduplicate", "DeduplicateWithinWatermark",
+    "CollectMetrics", "EventTimeWatermark", "Intersect", "Except", "Union", "CTERelationDef",
+}
+
+
+def _json_output(node: _Node) -> Optional[list[dict]]:
+    """``node.output()`` from the JSON, or None where the JSON cannot
+    tell (an unlisted node type, or a field serialized as null)."""
+    js, kids, name = node.js, node.kids, node.name
+    if isinstance(js.get("output"), list):
+        return [a[0] for a in js["output"]]
+    if name in ("Project", "Aggregate"):
+        return [e[0] for e in js["projectList" if name == "Project" else "aggregateExpressions"]]
+    if name == "Window":
+        return _output(kids[0]) + [e[0] for e in js["windowExpressions"]]
+    if name == "Generate" and js["unrequiredChildIndex"] == []:
+        return _output(kids[0]) + [a[0] for a in js["generatorOutput"]]
+    if name == "Join":
+        kind = js["joinType"]
+        cls = kind.get("object") or kind.get("product-class") or ""
+        if cls.endswith(("LeftSemi$", "LeftAnti$")):
+            return _output(kids[0])
+        if cls.endswith("ExistenceJoin"):
+            return _output(kids[0]) + [kind["exists"][0]]
+        return _output(kids[0]) + _output(kids[1])
+    if name == "UnionLoop" and js["outputAttrIds"]:
+        return [dict(a, exprId=i) for a, i in zip(_output(kids[0]), js["outputAttrIds"])]
+    if name == "WithCTE":
+        return _output(kids[js["plan"]])
+    if name == "OneRowRelation":
+        return []
+    return _output(kids[0]) if name in _PASS_THROUGH else None
+
+
+def _jvm_output(node: _Node) -> list[dict]:
+    return [
+        {"name": a.name(), "exprId": {"id": a.exprId().id()}, "nullable": a.nullable(),
+         "dataType": json.loads(a.dataType().json())}
+        for a in _seq(node.jvm().output())
+    ]
+
+
+def _output(node: _Node) -> list[dict]:
+    """``node.output()``: the top node of each output attribute, from
+    the JSON where it tells, else over py4j."""
+    if node.out is None:
+        out = _json_output(node)
+        node.out = _jvm_output(node) if out is None else out
+    return node.out
+
+
+# ---------------------------------------------------------------------------
+# leaves and write commands: what the JSON drops, read over py4j
+# ---------------------------------------------------------------------------
+
+
+def _fields_of(node: _Node, types: dict[str, str]) -> list[FieldInfo]:
+    """The node's output schema; ``types`` memoizes each distinct
+    type's ``simpleString``, read over py4j once."""
     try:
-        for a in _seq(node.output()):
-            out.append(FieldInfo(a.name(), a.dataType().simpleString(), a.nullable()))
+        out, attrs, (_, _, data_type) = [], _output(node), _classes()
+        if not all("dataType" in a for a in attrs):  # an Alias: typed by its child
+            attrs = _jvm_output(node)
+        for a in attrs:
+            key = json.dumps(a["dataType"])
+            if key not in types:
+                types[key] = data_type.fromJson(key).simpleString()
+            out.append(FieldInfo(a["name"], types[key], a["nullable"]))
+        return out
     except Exception:
-        pass
-    return out
-
-
-def _leaf_attr_ids(node) -> list[tuple[int, str]]:
-    """(exprId, name) per output attribute of a leaf relation."""
-    out = []
-    try:
-        for a in _seq(node.output()):
-            out.append((a.exprId().id(), a.name()))
-    except Exception:
-        pass
-    return out
+        return []
 
 
 def _short_name(path: str) -> str:
@@ -161,63 +304,51 @@ def _short_name(path: str) -> str:
     return base.rsplit(".", 1)[0] if "." in base else base
 
 
-# ---------------------------------------------------------------------------
-# input (leaf relation) collection
-# ---------------------------------------------------------------------------
-
-
-def _leaf_ref(node) -> Optional[DatasetRef]:
+def _leaf_ref(node: _Node, types: dict[str, str]) -> Optional[DatasetRef]:
     """Recognize a plan leaf as a dataset reference, else None."""
-    name = _cls(node)
     try:
-        if name == "LogicalRelation":
-            ct = node.catalogTable()
-            if ct.isDefined():
-                ident = ct.get().identifier().unquotedString()
-                return DatasetRef(kind="table", name=ident, fields=_fields_of(node))
-            rel = node.relation()
-            rel_cls = rel.getClass().getSimpleName()
-            if rel_cls == "JDBCRelation":
-                # external DB read (SURVEY §2.1 jdbc scan — exercised
-                # end-to-end against embedded Derby in
-                # operators/sources_sinks.py::source_jdbc_roundtrip)
-                tbl = None
-                try:
-                    tbl = rel.jdbcOptions().tableOrQuery()
-                except Exception:
-                    pass
-                return DatasetRef(kind="table", format="jdbc", name=tbl, fields=_fields_of(node))
-            paths, fmt = [], None
-            try:
-                paths = [p.toString() for p in _seq(rel.location().rootPaths())]
-                fmt = rel.fileFormat().toString().lower()
-            except Exception:
-                pass
-            ref_name = _short_name(paths[0]) if paths else None
-            return DatasetRef(kind="path", format=fmt, name=ref_name, paths=paths, fields=_fields_of(node))
-        if name in ("DataSourceV2Relation", "DataSourceV2ScanRelation"):
-            try:
-                tbl = node.table().name()
-            except Exception:
-                tbl = None
-            return DatasetRef(kind="table", format="v2", name=tbl, fields=_fields_of(node))
-        if name in ("StreamingRelation", "StreamingRelationV2", "StreamingExecutionRelation"):
-            src = None
-            try:
-                src = node.sourceName()
-            except Exception:
-                pass
-            return DatasetRef(kind="streaming", format=src, name=src, fields=_fields_of(node))
-        if name in ("LocalRelation", "OneRowRelation", "Range"):
-            return DatasetRef(kind="memory", name=name.lower(), fields=_fields_of(node))
-        if name in ("HiveTableRelation", "UnresolvedCatalogRelation", "CatalogRelation"):
-            try:
-                ident = node.tableMeta().identifier().unquotedString()
-            except Exception:
-                ident = name
-            return DatasetRef(kind="table", name=ident, fields=_fields_of(node))
+        ref = _leaf_dataset(node.jvm, node.name)
     except Exception:
-        return DatasetRef(kind="unknown", name=name)
+        return DatasetRef(kind="unknown", name=node.name)
+    if ref is not None:
+        ref.fields = _fields_of(node, types)
+    return ref
+
+
+def _or_none(get):
+    """``get()``, or None when the JVM call fails."""
+    try:
+        return get()
+    except Exception:
+        return None
+
+
+def _leaf_dataset(jvm, name: str) -> Optional[DatasetRef]:
+    if name == "LogicalRelation":
+        ct = jvm().catalogTable()
+        if ct.isDefined():
+            return DatasetRef(kind="table", name=ct.get().identifier().unquotedString())
+        rel = jvm().relation()
+        if rel.getClass().getSimpleName() == "JDBCRelation":
+            # external DB read (SURVEY §2.1 jdbc scan — exercised
+            # end-to-end against embedded Derby in
+            # operators/sources_sinks.py::source_jdbc_roundtrip)
+            tbl = _or_none(lambda: rel.jdbcOptions().tableOrQuery())
+            return DatasetRef(kind="table", format="jdbc", name=tbl)
+        paths = _or_none(lambda: [p.toString() for p in _seq(rel.location().rootPaths())]) or []
+        fmt = _or_none(lambda: rel.fileFormat().toString().lower())
+        ref_name = _short_name(paths[0]) if paths else None
+        return DatasetRef(kind="path", format=fmt, name=ref_name, paths=paths)
+    if name in ("DataSourceV2Relation", "DataSourceV2ScanRelation"):
+        return DatasetRef(kind="table", format="v2", name=_or_none(lambda: jvm().table().name()))
+    if name in ("StreamingRelation", "StreamingRelationV2", "StreamingExecutionRelation"):
+        src = _or_none(lambda: jvm().sourceName())
+        return DatasetRef(kind="streaming", format=src, name=src)
+    if name in ("LocalRelation", "OneRowRelation", "Range"):
+        return DatasetRef(kind="memory", name=name.lower())
+    if name in ("HiveTableRelation", "UnresolvedCatalogRelation", "CatalogRelation"):
+        ident = _or_none(lambda: jvm().tableMeta().identifier().unquotedString())
+        return DatasetRef(kind="table", name=ident or name)
     return None
 
 
@@ -227,44 +358,6 @@ def collect_inputs(plan) -> list[DatasetRef]:
     return inputs
 
 
-def _children(node) -> list:
-    out = []
-    try:
-        out.extend(_seq(node.children()))
-    except Exception:
-        pass
-    # subqueries live in expressions (e.g. scalar subquery, IN-subquery)
-    try:
-        sq = node.subqueries()
-        out.extend(_seq(sq))
-    except Exception:
-        pass
-    return out
-
-
-# ---------------------------------------------------------------------------
-# column-level lineage: bottom-up exprId dataflow
-# ---------------------------------------------------------------------------
-
-
-def _named_expr_nodes(node) -> list:
-    """The node's defining NamedExpressions, per node type."""
-    name = _cls(node)
-    try:
-        if name == "Project":
-            return _seq(node.projectList())
-        if name == "Aggregate":
-            return _seq(node.aggregateExpressions())
-        if name == "Window":
-            return _seq(node.windowExpressions())
-        if name == "Generate":
-            return _seq(node.generatorOutput())
-        # Generate and Expand have dedicated branches in the walk
-    except Exception:
-        pass
-    return []
-
-
 def column_lineage(plan) -> list[ColumnLineage]:
     """Map each output column of ``plan`` to its base input columns."""
     _, columns, _ = analyze_plan(plan, with_columns=True)
@@ -272,13 +365,8 @@ def column_lineage(plan) -> list[ColumnLineage]:
 
 
 # DSv2 write plans don't follow the v1 *Command naming
-V2_WRITE_NODES = {
-    "CreateTableAsSelect",
-    "ReplaceTableAsSelect",
-    "AppendData",
-    "OverwriteByExpression",
-    "OverwritePartitionsDynamic",
-}
+V2_WRITE_NODES = {"CreateTableAsSelect", "ReplaceTableAsSelect", "AppendData",
+                  "OverwriteByExpression", "OverwritePartitionsDynamic"}
 
 # v1 write commands carry Insert/AsSelect/SaveInto in the class name;
 # a bare *Command suffix also matches SET/SHOW/DESCRIBE/EXPLAIN etc.,
@@ -294,41 +382,30 @@ def is_write_command(cls_name: str) -> bool:
     return cls_name in V2_WRITE_NODES or bool(_WRITE_CMD_RE.search(cls_name))
 
 
-def _command_output(node) -> Optional[DatasetRef]:
-    """Recognize a write COMMAND node's target (SURVEY §0: the
-    reference's primary capture points — InsertIntoHadoopFsRelation,
+def _command_output(cmd, name: str) -> DatasetRef:
+    """A write COMMAND node's target (SURVEY §0: the reference's primary
+    capture points — InsertIntoHadoopFsRelation,
     CreateDataSourceTableAsSelect, plus the DSv2 write plans)."""
-    name = _cls(node)
-    if not is_write_command(name):
-        return None
     if name in V2_WRITE_NODES:
         # v2: the target rides a NamedRelation
-        for getter in ("table", "name"):
-            try:
-                t = getattr(node, getter)()
-                return DatasetRef(kind="table", format="v2", name=t.name())
-            except Exception:
-                continue
-        return DatasetRef(kind="table", format="v2", name=name)
-    for table_getter in ("table", "tableDesc"):
-        # .table() → CatalogTable on InsertIntoHiveTable / datasource
-        # commands; .tableDesc() → CreateHiveTableAsSelectCommand
-        try:
-            ident = getattr(node, table_getter)().identifier().unquotedString()
-            return DatasetRef(kind="table", name=ident)
-        except Exception:
-            pass
-    try:
-        path = node.outputPath().toString()
-        fmt = None
-        try:
-            fmt = node.fileFormat().toString().lower()
-        except Exception:
-            pass
+        target = _or_none(lambda: cmd.table().name()) or _or_none(lambda: cmd.name().name())
+        return DatasetRef(kind="table", format="v2", name=target or name)
+    # .table() → CatalogTable on InsertIntoHiveTable / datasource
+    # commands; .tableDesc() → CreateHiveTableAsSelectCommand
+    ident = _or_none(lambda: cmd.table().identifier().unquotedString()) or _or_none(
+        lambda: cmd.tableDesc().identifier().unquotedString())
+    if ident:
+        return DatasetRef(kind="table", name=ident)
+    path = _or_none(lambda: cmd.outputPath().toString())
+    if path:
+        fmt = _or_none(lambda: cmd.fileFormat().toString().lower())
         return DatasetRef(kind="path", format=fmt, name=_short_name(path), paths=[path])
-    except Exception:
-        pass
     return DatasetRef(kind="unknown", name=name)
+
+
+# ---------------------------------------------------------------------------
+# the walk: inputs + bottom-up exprId dataflow for column lineage
+# ---------------------------------------------------------------------------
 
 
 def analyze_plan(
@@ -337,8 +414,8 @@ def analyze_plan(
     """ONE tree walk producing inputs, column lineage, and (for SQL
     write commands) the output target.
 
-    py4j round-trips dominate extraction cost (~50 ms split across two
-    walks before this merge), so leaves are analyzed once and shared.
+    The plan crosses py4j once, as JSON; the walk runs in Python and
+    calls the JVM only for leaves and write commands.
     """
     mapping: dict[int, set[tuple[str, str]]] = {}
     found: list[DatasetRef] = []
@@ -348,134 +425,99 @@ def analyze_plan(
     # (a CTERelationRef / UnionLoopRef mints fresh exprIds per reference)
     cte_outs: dict[int, list[int]] = {}
     loop_outs: dict[int, list[int]] = {}
+    types: dict[str, str] = {}  # simpleString per dataType JSON
 
-    def ds_label(ref: DatasetRef) -> str:
-        return ref.name or (ref.paths[0] if ref.paths else ref.kind)
+    def bind_by_position(outs: list[dict], bases: list[int]) -> None:
+        for a, base in zip(outs, bases):
+            mapping[_eid(a)] = set(mapping.get(base, set()))
 
-    def walk(node, view: Optional[str] = None):
-        name = _cls(node)
-        if name == "CommandResult":
-            # a later action on an already-executed command's DataFrame
-            # sees this wrapper; the real command hangs off it
-            try:
-                walk(node.commandLogicalPlan(), None)
-                return
-            except Exception:
-                pass
+    def union_by_position(outs: list[dict], rows: list[list[set[int]]]) -> None:
+        # the attr at position p takes the sources of every row's refs at p
+        for pos, a in enumerate(outs):
+            srcs: set[tuple[str, str]] = set()
+            for row in rows:
+                for r in row[pos] if pos < len(row) else ():
+                    srcs |= mapping.get(r, set())
+            mapping[_eid(a)] = srcs
+
+    def outputs_of(kids: list[_Node]) -> list[list[set[int]]]:
+        return [[{_eid(a)} for a in _output(k)] for k in kids]
+
+    def walk(node: _Node, view: Optional[str] = None):
+        name, js = node.name, node.js
+        if name == "CommandResult" and isinstance(js.get("commandLogicalPlan"), list):
+            # a later action on an executed command's DataFrame sees
+            # this wrapper; the real command hangs off it
+            walk(_tree(js["commandLogicalPlan"], lambda: node.jvm().commandLogicalPlan()))
+            return
         if is_write_command(name):
-            cmd_out = _command_output(node)
-            if cmd_out is not None and output_ref[0] is None:
+            cmd_out = _command_output(node.jvm(), name)
+            if output_ref[0] is None:
                 output_ref[0] = cmd_out
-            # the written query hangs off .query(), not always children
-            try:
-                q = node.query()
-                if cmd_out is not None and not cmd_out.fields:
-                    cmd_out.fields = _fields_of(q)
-                if node.children().size() == 0:
-                    walk(q, None)
+            # the written query: a child index, or a plan that is not a
+            # child (walked instead of the children)
+            query = js.get("query")
+            if isinstance(query, list):
+                query = _tree(query, lambda: node.jvm().query())
+            elif isinstance(query, int):
+                query = node.kids[query]
+            if isinstance(query, _Node):
+                cmd_out.fields = cmd_out.fields or _fields_of(query, types)
+                if not node.kids:
+                    walk(query)
                     return
-            except Exception:
-                pass
             for ch in _children(node):
-                walk(ch, None)
+                walk(ch)
             return
         if name == "SubqueryAlias":
-            try:
-                alias = node.alias()
-            except Exception:
-                alias = None
             for ch in _children(node):
-                walk(ch, alias)
+                walk(ch, js["identifier"]["name"])
             return
         if name == "CTERelationDef":
             # walk the definition, then expose its output ids for every
             # later CTERelationRef of the same cte id
             for ch in _children(node):
                 walk(ch, view)
-            try:
-                cte_outs[node.id()] = [
-                    a.exprId().id() for a in _seq(node.child().output())
-                ]
-            except Exception:
-                pass
+            cte_outs[js["id"]] = [_eid(a) for a in _output(node.kids[0])]
             return
         if name == "CTERelationRef":
-            try:
-                base = cte_outs.get(node.cteId(), [])
-                for pos, a in enumerate(_seq(node.output())):
-                    if pos < len(base):
-                        mapping[a.exprId().id()] = set(mapping.get(base[pos], set()))
-            except Exception:
-                pass
-            return  # leaf; the def's walk already collected its inputs
+            # leaf; the def's walk already collected its inputs
+            bind_by_position(_output(node), cte_outs.get(js["cteId"], []))
+            return
         if name == "UnionLoop":
             # recursive CTE body: walk the anchor FIRST so the recursive
-            # branch's UnionLoopRef can bind to the anchor's columns,
-            # then bind the loop's own output per-position like Union
-            try:
-                loop_id = node.id()
-            except Exception:
-                loop_id = None
+            # branch's UnionLoopRef binds to its columns; then like Union
             kids = _children(node)
             if kids:
-                walk(kids[0], None)
-                try:
-                    loop_outs[loop_id] = [
-                        a.exprId().id() for a in _seq(kids[0].output())
-                    ]
-                except Exception:
-                    pass
+                walk(kids[0])
+                loop_outs[js["id"]] = [_eid(a) for a in _output(kids[0])]
                 for k in kids[1:]:
-                    walk(k, None)
-            try:
-                kid_outs = [_seq(k.output()) for k in kids]
-                for pos, a in enumerate(_seq(node.output())):
-                    srcs: set[tuple[str, str]] = set()
-                    for ko in kid_outs:
-                        if pos < len(ko):
-                            srcs |= mapping.get(ko[pos].exprId().id(), set())
-                    mapping[a.exprId().id()] = srcs
-            except Exception:
-                pass
+                    walk(k)
+            union_by_position(_output(node), outputs_of(kids))
             return
         if name == "UnionLoopRef":
-            try:
-                base = loop_outs.get(node.loopId(), [])
-                for pos, a in enumerate(_seq(node.output())):
-                    if pos < len(base):
-                        mapping[a.exprId().id()] = set(mapping.get(base[pos], set()))
-            except Exception:
-                pass
-            return  # leaf; the anchor's walk already collected inputs
+            # leaf; the anchor's walk already collected inputs
+            bind_by_position(_output(node), loop_outs.get(js["loopId"], []))
+            return
         if name == "LogicalRDD":
             # a lineage_checkpoint'ed subtree: splice the recorded
             # pre-checkpoint inputs/column sources back in
-            try:
-                rdd = node.rdd()
-                entry = _resolve_checkpoint_entry(
-                    (rdd.context().applicationId(), rdd.id())
-                )
-            except Exception:
-                entry = None
+            rdd = _or_none(lambda: node.jvm().rdd())
+            entry = None if rdd is None else _or_none(
+                lambda: _resolve_checkpoint_entry((rdd.context().applicationId(), rdd.id())))
             if entry is not None:
                 ckpt_inputs, colmap = entry
                 found.extend(ckpt_inputs)
-                if with_columns:
-                    try:
-                        for a in _seq(node.output()):
-                            srcs = colmap.get(a.name())
-                            if srcs:
-                                mapping[a.exprId().id()] = set(srcs)
-                    except Exception:
-                        pass
+                for a in _output(node) if with_columns else ():
+                    if colmap.get(a["name"]):
+                        mapping[_eid(a)] = set(colmap[a["name"]])
                 return
-        ref = _leaf_ref(node)
+        ref = None if node.kids else _leaf_ref(node, types)
         chs = _children(node)
         if ref is None and not chs:
-            # unrecognized LEAF (LogicalRDD, CTERelationRef, checkpoint
-            # scans, ...): record an explicit unknown rather than
-            # silently reporting a query that read nothing
-            ref = DatasetRef(kind="unknown", name=name, fields=_fields_of(node))
+            # unrecognized LEAF (LogicalRDD, checkpoint scans, ...): an
+            # explicit unknown, never a query that silently read nothing
+            ref = DatasetRef(kind="unknown", name=name, fields=_fields_of(node, types))
         if ref is not None:
             if view and ref.kind in ("memory",):
                 ref = DatasetRef(kind="table", name=view, fields=ref.fields)
@@ -483,108 +525,65 @@ def analyze_plan(
                 ref.name = view
             found.append(ref)
             if with_columns:
-                label = ds_label(ref)
-                for f, a_name in _leaf_attr_ids(node):
-                    mapping[f] = {(label, a_name)}
+                label = ref.name or (ref.paths[0] if ref.paths else ref.kind)
+                for a in _output(node):
+                    mapping[_eid(a)] = {(label, a["name"])}
             return
         for ch in chs:
-            walk(ch, None)
+            walk(ch)
         if not with_columns:
             return
         # after children: register this node's derived expressions
         if name == "Union":
-            # output attrs bind per-position to every child's attrs
-            try:
-                kids = _seq(node.children())
-                outs = _seq(node.output())
-                kid_outs = [_seq(k.output()) for k in kids]
-                for pos, a in enumerate(outs):
-                    srcs: set[tuple[str, str]] = set()
-                    for ko in kid_outs:
-                        if pos < len(ko):
-                            srcs |= mapping.get(ko[pos].exprId().id(), set())
-                    mapping[a.exprId().id()] = srcs
-            except Exception:
-                pass
+            union_by_position(_output(node), outputs_of(node.kids))
             return
         if name == "Generate":
             # generator OUTPUT attrs (e.g. pos/col of posexplode) carry
             # no references — the source columns hang off generator()
             gen_srcs: set[tuple[str, str]] = set()
-            try:
-                for ref_attr in _iter_attr_set(node.generator().references()):
-                    gen_srcs |= mapping.get(ref_attr.exprId().id(), set())
-                for a in _seq(node.generatorOutput()):
-                    mapping[a.exprId().id()] = set(gen_srcs)
-            except Exception:
-                pass
+            for r in _refs(js["generator"]):
+                gen_srcs |= mapping.get(r, set())
+            for a in js["generatorOutput"]:
+                mapping[_eid(a[0])] = set(gen_srcs)
             return
         if name == "Expand":
             # rollup/cube/grouping-sets: output attrs are FRESH exprIds
-            # bound positionally to each projection row — union the
-            # refs of every projection's expression at that position
-            try:
-                outs = _seq(node.output())
-                projs = [_seq(p) for p in _seq(node.projections())]
-                for pos, a in enumerate(outs):
-                    srcs: set[tuple[str, str]] = set()
-                    for proj in projs:
-                        if pos < len(proj):
-                            try:
-                                for ref_attr in _iter_attr_set(proj[pos].references()):
-                                    srcs |= mapping.get(ref_attr.exprId().id(), set())
-                            except Exception:
-                                pass
-                    mapping[a.exprId().id()] = srcs
-            except Exception:
-                pass
-            return
-        for ne in _named_expr_nodes(node):
-            try:
-                eid = ne.exprId().id()
-            except Exception:
-                continue
-            srcs: set[tuple[str, str]] = set()
-            try:
-                for ref_attr in _iter_attr_set(ne.references()):
-                    srcs |= mapping.get(ref_attr.exprId().id(), set())
-            except Exception:
-                pass
-            if eid in mapping:
-                mapping[eid] |= srcs
+            # bound positionally to every projection row's expressions
+            if js["projections"] is None:  # rows that are not Lists
+                projs = [
+                    [{a.exprId().id() for a in _seq(e.references().toSeq())} for e in _seq(row)]
+                    for row in _seq(node.jvm().projections())
+                ]
             else:
-                mapping[eid] = srcs
+                projs = [[_refs(e) for e in row] for row in js["projections"]]
+            union_by_position(_output(node), projs)
+            return
+        field = {"Project": "projectList", "Aggregate": "aggregateExpressions",
+                 "Window": "windowExpressions"}.get(name)
+        for expr in js[field] if field else ():
+            if "exprId" not in expr[0]:
+                continue
+            srcs = mapping.setdefault(_eid(expr[0]), set())
+            for r in _refs(expr):
+                srcs |= mapping.get(r, set())
 
-    walk(plan, None)
+    root = _tree(json.loads(_plan_json(plan)), lambda: plan)
+    walk(root)
 
     # dedupe inputs (self-joins read the same input twice — SURVEY §2.3)
-    seen, inputs = set(), []
+    unique: dict[tuple, DatasetRef] = {}
     for r in found:
-        k = r.key()
-        if k not in seen:
-            seen.add(k)
-            inputs.append(r)
+        unique.setdefault(r.key(), r)
 
-    columns: list = []
-    if with_columns:
-        try:
-            for a in _seq(plan.output()):
-                srcs = mapping.get(a.exprId().id(), set())
-                if _raw:
-                    # internal form for lineage_checkpoint: keep the
-                    # (dataset, column) tuples — dataset labels may
-                    # contain dots, so the joined string is lossy
-                    columns.append((a.name(), set(srcs)))
-                else:
-                    columns.append(
-                        ColumnLineage(
-                            output=a.name(),
-                            inputs=sorted(f"{ds}.{col}" for ds, col in srcs),
-                        )
-                    )
-        except Exception:
-            pass
-    return inputs, columns, output_ref[0]
+    # _raw, for lineage_checkpoint, keeps the (dataset, column) tuples:
+    # dataset labels may contain dots, so the joined string is lossy
+    columns = [
+        (a["name"], set(mapping.get(_eid(a), ()))) if _raw else ColumnLineage(
+            output=a["name"],
+            inputs=sorted(f"{ds}.{col}" for ds, col in mapping.get(_eid(a), ())))
+        for a in (_output(root) if with_columns else ())
+    ]
+    return list(unique.values()), columns, output_ref[0]
 
 
 # ---------------------------------------------------------------------------

@@ -204,10 +204,10 @@ class LineageSession:
         reporter: Optional["Reporter"] = None,
         async_capture: bool = False,
     ):
-        """``async_capture=True`` moves plan extraction (a ~50 ms
-        Catalyst-serialization floor per report, measured — BASELINE.md)
-        off the caller's thread onto a single ordered worker; call
-        ``flush()`` before reading reports synchronously."""
+        """``async_capture=True`` moves plan extraction (tens of ms per
+        report, growing with plan size — BASELINE.md) off the caller's
+        thread onto a single ordered worker; call ``flush()`` before
+        reading reports synchronously."""
         from spark_lineage_spark.plans.reporters import reporter_from_conf
 
         self.spark = tune_runtime(spark)
@@ -232,9 +232,7 @@ class LineageSession:
         return LineageReader(self)
 
     def sql(self, query: str, **kwargs) -> "LineageDataFrame":
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.perf_counter()
         df = self.spark.sql(query, **kwargs)
         # DDL/DML commands execute EAGERLY inside spark.sql(); the
         # write already happened, so report now (one report per
@@ -246,7 +244,7 @@ class LineageSession:
         from spark_lineage_spark.plans.extract import is_write_command
 
         if is_write_command(cls):
-            self.emit(df, "sql.command", _time.time() - t0)
+            self.emit(df, "sql.command", time.perf_counter() - t0)
         return self._wrap(df)
 
     def table(self, name: str) -> "LineageDataFrame":

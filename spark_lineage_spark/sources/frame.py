@@ -101,13 +101,13 @@ class LineageDataFrame:
     # -- action interception ------------------------------------------
     def _wrap_action(self, name: str, fn):
         def action(*args, **kwargs):
-            t0 = time.time()
+            t0 = time.perf_counter()
             err = None
             try:
                 result = fn(*args, **kwargs)
             except Exception as e:  # report failures too (onFailure parity)
                 err = f"{type(e).__name__}: {e}"
-                self._session.emit(self._df, name, time.time() - t0, error=err)
+                self._session.emit(self._df, name, time.perf_counter() - t0, error=err)
                 raise
             n_rows = None
             if name == "count":
@@ -122,7 +122,7 @@ class LineageDataFrame:
                     n_rows = int(result.shape[0])
                 except Exception:
                     pass
-            self._session.emit(self._df, name, time.time() - t0, num_output_rows=n_rows)
+            self._session.emit(self._df, name, time.perf_counter() - t0, num_output_rows=n_rows)
             return result
 
         return action

@@ -63,7 +63,7 @@ class LineageWriter:
         self._session.emit(
             self._df,
             func,
-            time.time() - t0,
+            time.perf_counter() - t0,
             output={"kind": kind, "format": fmt, "name": name, "paths": paths or []},
             error=error,
             num_output_rows=rows,
@@ -83,7 +83,7 @@ class LineageWriter:
         for op, args, kwargs in self._ops:
             writer = getattr(writer, op)(*args, **kwargs)
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             result = terminal(writer)
         except Exception as e:

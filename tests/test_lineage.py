@@ -224,6 +224,41 @@ def test_failure_report(engine, sf_dir):
     assert rep.last().run.error is not None
 
 
+@pytest.mark.parametrize("where", ["action", "write", "sql_command"])
+def test_duration_ignores_wall_clock_steps(engine, sf_dir, tmp_path, monkeypatch, where):
+    """``run.duration_s`` is measured on a monotonic clock: the timing
+    module's wall clock stepping back an hour at every read (a clock
+    correction mid-query) leaves it non-negative."""
+    import time
+    import types
+
+    from spark_lineage_spark import session
+    from spark_lineage_spark.sources import frame, writer
+
+    eng, rep = engine
+    df = eng._wrap(load(eng.spark, sf_dir, "region"))
+    module = {"action": frame, "write": writer, "sql_command": session}[where]
+    reads = []
+
+    def stepping_back():
+        reads.append(1)
+        return time.time() - 3600.0 * len(reads)
+
+    monkeypatch.setattr(module, "time", types.SimpleNamespace(
+        time=stepping_back, perf_counter=time.perf_counter))
+    if where == "action":
+        df.count()
+    elif where == "write":
+        df.write.mode("overwrite").parquet(str(tmp_path / "region_copy"))
+    else:
+        df.createOrReplaceTempView("region_clock")
+        eng.sql(f"CREATE TABLE region_clock_t USING parquet LOCATION '{tmp_path}/t' "
+                "AS SELECT * FROM region_clock")
+        eng.spark.sql("DROP TABLE region_clock_t")
+    monkeypatch.undo()
+    assert rep.last().run.duration_s >= 0
+
+
 def test_groupby_na_randomsplit_stay_in_facade(engine, sf_dir):
     """Intermediate holders (GroupedData, na, randomSplit lists) must
     not silently drop out of the facade — the most common aggregation
@@ -286,7 +321,7 @@ def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_async_capture_preserves_reports(spark, sf_dir):
-    """async_capture moves the ~50ms extraction off the caller thread;
+    """async_capture moves extraction off the caller thread;
     flush() then exposes the same reports in order."""
     rep = InMemoryReporter()
     eng = LineageSession(spark, reporter=rep, async_capture=True)
