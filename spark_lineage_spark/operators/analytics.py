@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from spark_lineage_spark.plans.extract import lineage_checkpoint, lineage_checkpoint_lazy
 from spark_lineage_spark.registry import query
-from spark_lineage_spark.session import evict_cache
+from spark_lineage_spark.staging import staged_frame
 from spark_lineage_spark.tables import load, register_views
 
 
@@ -623,9 +623,6 @@ def hist_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COPURCHASE_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected part co-purchase edges (u < v, distinct), shared by
     the graph operators.
@@ -641,32 +638,27 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree stats) share one edge table instead of rebuilding it (the
     _shingle_index staging discipline).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COPURCHASE_EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    app = spark.sparkContext.applicationId
-    evict_cache(_COPURCHASE_EDGE_CACHE, app, key)
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    ords = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    out = (
-        ords.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps)),"
-                    " y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
+    def build() -> DataFrame:
+        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        ords = li.groupBy("l_orderkey").agg(
+            F.sort_array(F.collect_set("l_partkey")).alias("ps")
         )
-        .select("e.u", "e.v")
-        .distinct()
-        .transform(lineage_checkpoint_lazy)
-    )
-    _COPURCHASE_EDGE_CACHE[key] = out
-    return out
+        return (
+            ords.select(
+                F.explode(
+                    F.expr(
+                        "flatten(transform(ps, (x, i) ->"
+                        " transform(slice(ps, i + 2, size(ps)),"
+                        " y -> struct(x AS u, y AS v))))"
+                    )
+                ).alias("e")
+            )
+            .select("e.u", "e.v")
+            .distinct()
+            .transform(lineage_checkpoint_lazy)
+        )
+
+    return staged_frame(spark, ("copurchase_edges", sf_dir), build)
 
 
 def small_node_count(spark: SparkSession, sf_dir: str) -> bool:

@@ -587,10 +587,15 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     (The dim filter must NOT be on the join column — a filter there is
     pushed through the join statically and no runtime pruning is
     needed; that variant is sink_parquet_partitioned.)"""
-    import os as _os
+    import hashlib
+    import os
 
-    out = _tmp_dpp(sf_dir)
-    if not _os.path.exists(out):
+    from spark_lineage_spark.staging import scratch_path
+
+    # partitioned copy written once per process and fixture
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    out = os.path.join(scratch_path("dpp", key), "orders_by_year")
+    if not os.path.exists(out):
         load(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate")
         ).write.mode("overwrite").partitionBy("o_year").parquet(out)
@@ -609,17 +614,6 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         fact.join(F.broadcast(dim), fact.o_year == dim.d_year)
         .groupBy("o_year")
         .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-    )
-
-
-def _tmp_dpp(sf_dir: str) -> str:
-    import hashlib
-    import os as _os
-    import tempfile as _tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"sls_dpp_{_os.getpid()}_{key}", "orders_by_year"
     )
 
 

@@ -11,35 +11,16 @@ rows-only entry proving the lineage store is engine-queryable
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spark_lineage_spark.registry import query
+from spark_lineage_spark.staging import scratch_dir, scratch_table
 from spark_lineage_spark.tables import load
 
 # per-process counter for transitive-closure temp-view names (see
 # lineage_transitive_closure: pid alone is not enough within a process)
 _TC_VIEW_SEQ = 0
-
-
-def _fresh_run_dir(tag: str) -> str:
-    """pid-scoped staging dir + reap of DEAD-owner siblings only — the
-    sls_arch_ discipline (streaming/queries.py): a concurrent live
-    process's lineage log must never be deleted mid-run; un-pidded
-    legacy dirs are left alone (tiny: one JSONL + a small parquet)."""
-    from spark_lineage_spark.operators.sources_sinks import _pid_alive
-
-    base = tempfile.gettempdir()
-    prefix = f"sls_lineage_{tag}_"
-    for d in os.listdir(base):
-        if not d.startswith(prefix):
-            continue
-        pid_s = d[len(prefix):].split("_", 1)[0]
-        if pid_s.isdigit() and int(pid_s) != os.getpid() and not _pid_alive(int(pid_s)):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    return tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_")
 
 
 @query(
@@ -69,7 +50,7 @@ def lineage_catalog_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark import LineageSession
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("q"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_q"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
     # pipeline 1: scan -> filter -> agg -> count (action)
@@ -78,7 +59,7 @@ def lineage_catalog_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nat.count()
     # pipeline 2: join -> write parquet (output lineage)
-    out_dir = os.path.join(_fresh_run_dir("out"), "joined")
+    out_dir = os.path.join(scratch_dir("lineage_out"), "joined")
     joined = engine._wrap(
         load(spark, sf_dir, "region").join(
             load(spark, sf_dir, "nation"),
@@ -141,7 +122,7 @@ def lineage_column_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark import LineageSession
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("cg"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_cg"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
     region = load(spark, sf_dir, "region")
@@ -211,10 +192,10 @@ def lineage_dataset_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark import LineageSession
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("dg"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_dg"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
-    out_dir = os.path.join(_fresh_run_dir("dgout"), "pricing_summary")
+    out_dir = os.path.join(scratch_dir("lineage_dgout"), "pricing_summary")
     joined = engine._wrap(
         load(spark, sf_dir, "region").join(
             load(spark, sf_dir, "nation"),
@@ -270,7 +251,7 @@ def lineage_impact_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark import LineageSession
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("ia"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_ia"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
     nation = load(spark, sf_dir, "nation")
@@ -335,7 +316,7 @@ def lineage_openlineage_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     engine._wrap(nation.select(F.upper("n_name").alias("upper_name"))).count()
 
-    out_dir = os.path.join(_fresh_run_dir("ol"), "ol_target")
+    out_dir = os.path.join(scratch_dir("lineage_ol"), "ol_target")
     engine._wrap(
         load(spark, sf_dir, "region").join(
             nation, F.col("r_regionkey") == F.col("n_regionkey")
@@ -424,19 +405,12 @@ def lineage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read side is exactly how jobs consume curated tables, and the
     table-kind edge is what joins lineage to catalog ACLs/retention."""
     from spark_lineage_spark import LineageSession
-    from spark_lineage_spark.operators.sources_sinks import (
-        _drop_table_and_location,
-        _proc_suffix,
-        _reap_stale_warehouse_dirs,
-    )
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("tr"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_tr"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
-    t = f"sls_lintbl_{_proc_suffix(sf_dir)}"
-    _reap_stale_warehouse_dirs(spark, "sls_lintbl_")
-    _drop_table_and_location(spark, t)
+    t = scratch_table(spark, "lintbl", sf_dir)
     engine._wrap(
         load(spark, sf_dir, "nation")
         .groupBy("n_regionkey")
@@ -447,7 +421,7 @@ def lineage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage = engine.lineage()
     # 'spark_catalog.default.sls_lintbl_<digest8>_<pid>' /
     # 'sls_lintbl_<digest8>_<pid>' -> 'sls_lintbl'; the pattern is the
-    # exact _proc_suffix shape (8 hex chars + pid), so path labels
+    # exact table_name shape (8 hex chars + pid), so path labels
     # ('nation') pass through unchanged
     def norm(col):
         return F.regexp_replace(
@@ -510,7 +484,7 @@ def lineage_streaming_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark.plans.reporters import JsonlReporter
     from spark_lineage_spark.streaming.listener import LineageStreamingListener
 
-    stage = _fresh_run_dir("sb")
+    stage = scratch_dir("lineage_sb")
     log_path = os.path.join(stage, "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(log_path))
     listener = LineageStreamingListener(
@@ -626,10 +600,10 @@ def lineage_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lineage_spark import LineageSession
     from spark_lineage_spark.plans.reporters import JsonlReporter
 
-    path = os.path.join(_fresh_run_dir("tc"), "reports.jsonl")
+    path = os.path.join(scratch_dir("lineage_tc"), "reports.jsonl")
     engine = LineageSession(spark, reporter=JsonlReporter(path))
 
-    stage = _fresh_run_dir("tcout")
+    stage = scratch_dir("lineage_tcout")
     hop1 = os.path.join(stage, "hop1_out")
     hop2 = os.path.join(stage, "hop2_out")
     engine._wrap(load(spark, sf_dir, "nation")).write.mode("overwrite").parquet(hop1)

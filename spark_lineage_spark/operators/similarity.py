@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from spark_lineage_spark.functions.arrays import cosine, dot, norm, to_double_array
 from spark_lineage_spark.plans.extract import lineage_checkpoint
 from spark_lineage_spark.registry import query
+from spark_lineage_spark.staging import staged_frame
 from spark_lineage_spark.tables import load
 
 TOP_K = 5
@@ -332,29 +333,19 @@ IVF_NASSIGN = 2  # each corpus vector is indexed under its 2 nearest lists
 IVF_TRAIN_TARGET = 256 * IVF_K  # ~256 training points per centroid
 
 
-_IVF_MODEL_CACHE: dict = {}
+def _ivf_model(spark: SparkSession, sf_dir: str):
+    """The IVF coarse quantizer: KMeans over a deterministic stride
+    sample of the corpus (sorted, one partition), fitted once per
+    (app, sf_dir)."""
+    def fit():
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
-
-def _ivf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, emb, lists) for the IVF family: every corpus vector
-    with its IVF_NPROBE best-ranked centroid lists (cosine, best
-    first). Extracted from llm_ann_ivf so the int8-in-cells variant
-    (llm_ann_ivf_int8) indexes and probes the IDENTICAL quantizer —
-    see llm_ann_ivf's docstring for the training/caching rationale."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    e = _parallel_corpus(
-        spark, load(spark, sf_dir, "embeddings")
-    ).select("vec_id", to_double_array("embedding").alias("emb"))
-    feat = e.withColumn("features", array_to_vector("emb"))
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _IVF_MODEL_CACHE.get(key)
-    if model is None:
-        for k in [k for k in _IVF_MODEL_CACHE if k[0] != key[0]]:
-            del _IVF_MODEL_CACHE[k]
-        n_corpus = load(spark, sf_dir, "embeddings").count()  # metadata-only
-        train = feat.select("vec_id", "features")
+        emb = load(spark, sf_dir, "embeddings")
+        n_corpus = emb.count()  # metadata-only
+        train = emb.select(
+            "vec_id", array_to_vector(to_double_array("embedding")).alias("features")
+        )
         if n_corpus > IVF_TRAIN_TARGET:
             stride = -(-n_corpus // IVF_TRAIN_TARGET)  # ceil
             train = train.filter(F.col("vec_id") % stride == 0)
@@ -370,7 +361,21 @@ def _ivf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         model = km.fit(train)
         train.unpersist()
-        _IVF_MODEL_CACHE[key] = model
+        return model
+
+    return staged_frame(spark, ("ivf_model", sf_dir), fit)
+
+
+def _ivf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, emb, lists) for the IVF family: every corpus vector
+    with its IVF_NPROBE best-ranked centroid lists (cosine, best
+    first). Extracted from llm_ann_ivf so the int8-in-cells variant
+    (llm_ann_ivf_int8) indexes and probes the IDENTICAL quantizer —
+    see llm_ann_ivf's docstring for the training/caching rationale."""
+    e = _parallel_corpus(
+        spark, load(spark, sf_dir, "embeddings")
+    ).select("vec_id", to_double_array("embedding").alias("emb"))
+    model = _ivf_model(spark, sf_dir)
     cent_lit = F.array(
         *[
             F.struct(
@@ -396,7 +401,7 @@ def _ivf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda s: s["centroid_id"],
     )
-    return feat.select("vec_id", "emb").withColumn("lists", ranked_lists)
+    return e.withColumn("lists", ranked_lists)
 
 
 def _ivf_centroid_values() -> str:

@@ -12,19 +12,18 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spark_lineage_spark.plans.extract import lineage_checkpoint
 from spark_lineage_spark.registry import query
-from spark_lineage_spark.tables import load, register_views
-
-
-def _tmp(name: str) -> str:
-    # pid-scoped so concurrent harness runs (bench + oracle check) never
-    # overwrite a sink directory another process is mid-read on
-    return os.path.join(tempfile.gettempdir(), f"sls_roundtrip_{os.getpid()}_{name}")
+from spark_lineage_spark.staging import (
+    fixture_dir,
+    scratch_path,
+    scratch_table,
+    staged_frame,
+)
+from spark_lineage_spark.tables import load, register_views, table_path
 
 
 @query(
@@ -59,7 +58,7 @@ def scan_parquet_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed csv write → csv scan (header, explicit schema — no
     inference in the checked path), then aggregate."""
-    out = _tmp("nation_csv")
+    out = scratch_path("roundtrip", "nation_csv")
     nat = load(spark, sf_dir, "nation")
     nat.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(nat.schema).option("header", True).csv(out)
@@ -79,7 +78,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("events_json")
+    out = scratch_path("roundtrip", "events_json")
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "props")
     ev.write.mode("overwrite").json(out)
     back = spark.read.schema(ev.schema).json(out)
@@ -98,7 +97,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("part_orc")
+    out = scratch_path("roundtrip", "part_orc")
     p = load(spark, sf_dir, "part")
     p.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
@@ -120,7 +119,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """write.partitionBy(status) → re-read with a partition filter —
     the re-read scans ONLY the o_orderstatus=F directory (static
     partition pruning; the at-scale layout pattern)."""
-    out = _tmp("orders_part")
+    out = scratch_path("roundtrip", "orders_part")
     o = load(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
@@ -145,9 +144,7 @@ def sink_table_saveastable(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata a path read cannot. Cleans its own name + warehouse
     location first (per-session metastore, persistent warehouse dir —
     same idempotency rule as the bucketed tables)."""
-    t = f"sls_nation_tbl_{_proc_suffix(sf_dir)}"
-    _reap_stale_warehouse_dirs(spark, "sls_nation_tbl_")
-    _drop_table_and_location(spark, t)
+    t = scratch_table(spark, "nation_tbl", sf_dir)
     load(spark, sf_dir, "nation").write.mode("overwrite").saveAsTable(t)
     return (
         spark.table(t)
@@ -356,11 +353,11 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keep derby.log out of the working directory (best-effort; a
         # no-op if Derby already booted in this JVM)
         spark._jvm.System.setProperty(
-            "derby.stream.error.file", os.path.join(tempfile.gettempdir(), "sls_derby.log")
+            "derby.stream.error.file", scratch_path("roundtrip", "derby.log")
         )
     except Exception:
         pass
-    db = _tmp("derby_db")
+    db = scratch_path("roundtrip", "derby_db")
     url = f"jdbc:derby:{db};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     nat = load(spark, sf_dir, "nation")
@@ -389,81 +386,6 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_STAGED: set = set()
-
-
-def _proc_suffix(sf_dir: str) -> str:
-    """Warehouse-table name suffix: fixture digest + pid.
-
-    The digest alone made concurrent harness processes on the same
-    fixture (bench + oracle check) share warehouse locations, so one
-    process's drop-before-restage rmtree could delete data another was
-    mid-read on (ADVICE r4). The metastore is per-session anyway, so
-    cross-process location reuse bought nothing; pid-scoping restores
-    collision-freedom and ``_reap_stale_warehouse_dirs`` stops dead
-    pids' directories from accumulating.
-    """
-    import hashlib
-
-    return f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-
-
-def _pid_alive(pid: int) -> bool:
-    """Portable liveness probe: signal 0 touches nothing but checks
-    existence/permission. EPERM means the pid exists under another
-    user — treat as alive (deleting is only safe when provably dead)."""
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    except OSError:
-        return True  # unknown state: keep the directory
-
-
-def _reap_stale_warehouse_dirs(spark: SparkSession, prefix: str) -> None:
-    """Remove warehouse dirs left by DEAD processes for ``prefix``.
-
-    Names end in ``_{pid}``; a dead pid cannot be mid-read, so its
-    directory is safe to delete. Live foreign pids are left alone
-    (that is the whole point of pid-scoping). Liveness via kill(pid, 0)
-    — /proc would wrongly report every foreign pid dead on non-Linux
-    hosts and reintroduce the mid-read rmtree race.
-    """
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path or ""
-    if not wh or not os.path.isdir(wh):
-        return
-    for d in os.listdir(wh):
-        if not d.startswith(prefix):
-            continue
-        pid_s = d.rsplit("_", 1)[-1]
-        if not pid_s.isdigit() or int(pid_s) == os.getpid():
-            continue
-        if not _pid_alive(int(pid_s)):
-            shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
-
-
-def _drop_table_and_location(spark: SparkSession, name: str) -> None:
-    """DROP TABLE + remove its warehouse directory. The metastore is
-    per-session (in-memory/Derby) while spark.sql.warehouse.dir
-    persists on disk, so a table written by a dead process is invisible
-    to DROP TABLE yet still blocks CREATE with LOCATION_ALREADY_EXISTS.
-    """
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path or ""
-    loc = os.path.join(wh, name.lower())
-    if wh and os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
-
-
 @query(
     "join_bucketed_colocated",
     "§2.1/§2.3 bucketed tables: co-located join with no join-time shuffle",
@@ -483,34 +405,23 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle: pay it once at ingest, never at query time; the aggregate
     then reuses the same hash-partitioned layout.
 
-    Staging writes once per (session, sf_dir) into the session
+    Each table is written once per (session, sf_dir) into the session
     warehouse (saveAsTable — bucket metadata lives in the catalog;
-    path-based parquet writes cannot carry it). Table names carry a
-    fixture digest + pid (see ``_proc_suffix``) so concurrent harness
-    processes never share a location; directories of dead pids are
-    reaped before staging, stale same-name locations dropped."""
-    app = spark.sparkContext.applicationId
-    suffix = _proc_suffix(sf_dir)
-    t_orders, t_lineitem = f"sls_b_orders_{suffix}", f"sls_b_lineitem_{suffix}"
-    if (app, sf_dir) not in _BUCKETED_STAGED:
-        for stale in [k for k in _BUCKETED_STAGED if k[0] != app]:
-            _BUCKETED_STAGED.discard(stale)
-        _reap_stale_warehouse_dirs(spark, "sls_b_")
-        _drop_table_and_location(spark, t_orders)
-        _drop_table_and_location(spark, t_lineitem)
-        load(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        ).write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").mode(
-            "overwrite"
-        ).saveAsTable(t_orders)
-        load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice"
-        ).write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").mode(
-            "overwrite"
-        ).saveAsTable(t_lineitem)
-        _BUCKETED_STAGED.add((app, sf_dir))
-    o = spark.table(t_orders)
-    li = spark.table(t_lineitem)
+    path-based parquet writes cannot carry it) under a pid-scoped name
+    (spark_lineage_spark.staging)."""
+
+    def bucketed(table: str, key: str, col: str):
+        def stage() -> DataFrame:
+            t = scratch_table(spark, f"b_{table}", sf_dir)
+            load(spark, sf_dir, table).select(key, col).write.bucketBy(
+                8, key
+            ).sortBy(key).mode("overwrite").saveAsTable(t)
+            return spark.table(t)
+
+        return staged_frame(spark, (f"b_{table}", sf_dir), stage)
+
+    o = bucketed("orders", "o_orderkey", "o_orderpriority")
+    li = bucketed("lineitem", "l_orderkey", "l_extendedprice")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy("o_orderpriority")
@@ -537,7 +448,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted cheap at write time via the split arity), so the framing
     is lossless — the round-trip must reproduce the parquet-derived
     aggregate exactly."""
-    out = _tmp("documents_text")
+    out = scratch_path("roundtrip", "documents_text")
     d = load(spark, sf_dir, "documents")
     d.select(
         F.concat_ws("|", F.col("lang"), F.col("text")).alias("value")
@@ -576,7 +487,7 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     no data rewrite — which is exactly why parquet data lakes tolerate
     additive drift. Batches split deterministically by key parity so
     the oracle can reconstruct both layouts."""
-    out = _tmp("orders_evolve")
+    out = scratch_path("roundtrip", "orders_evolve")
     o = load(spark, sf_dir, "orders")
     o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice").write.mode(
         "overwrite"
@@ -617,7 +528,7 @@ def scan_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     poison parsed values. (DROPMALFORMED/FAILFAST are the same reader
     one option away; the quarantine column only exists under
     PERMISSIVE.)"""
-    out = _tmp("nation_corrupt") + ".csv"
+    out = scratch_path("roundtrip", "nation_corrupt") + ".csv"
     n = load(spark, sf_dir, "nation")
     lines = n.select(
         F.concat_ws(",", "n_nationkey", "n_name", "n_regionkey").alias("value")
@@ -678,7 +589,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wiring — framing, escaping, schema application — not scan speed;
     at scale XML is an ingest-once format that lands in parquet.
     """
-    out = _tmp("nation_xml")
+    out = scratch_path("roundtrip", "nation_xml")
     n = load(spark, sf_dir, "nation")
     n.write.mode("overwrite").option("rowTag", "nation").format("xml").save(out)
     back = (
@@ -728,7 +639,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata is selected; the md5 here forces the full byte read on
     purpose.
     """
-    out = _tmp("binary_src")
+    out = scratch_path("roundtrip", "binary_src")
     os.makedirs(out, exist_ok=True)
     for name, payload in _BINARY_FILES.items():
         with open(os.path.join(out, name), "wb") as f:
@@ -769,9 +680,7 @@ def sink_table_default_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash proves both populations: metadata-backfilled old rows and
     explicitly-valued new rows. Same idempotent naming/cleanup
     discipline as the other managed tables."""
-    t = f"sls_region_dflt_{_proc_suffix(sf_dir)}"
-    _reap_stale_warehouse_dirs(spark, "sls_region_dflt_")
-    _drop_table_and_location(spark, t)
+    t = scratch_table(spark, "region_dflt", sf_dir)
     load(spark, sf_dir, "region").select("r_regionkey", "r_name").write.mode(
         "overwrite"
     ).saveAsTable(t)
@@ -789,6 +698,28 @@ def sink_table_default_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("r_regionkey").cast("bigint").alias("max_key"),
         )
     )
+
+
+def _doc_tree(spark: SparkSession, sf_dir: str) -> str:
+    """documents as lang=<lang>/deep/docs_{even,odd}.parquet by doc_id
+    parity, cached per fixture."""
+    import glob
+
+    def build(tmp: str) -> None:
+        docs = load(spark, sf_dir, "documents")
+        for lang in [r.lang for r in docs.select("lang").distinct().collect()]:  # bounded-collect-ok: language domain
+            for parity, pname in ((0, "even"), (1, "odd")):
+                sub = os.path.join(tmp, "stage", f"{lang}_{parity}")
+                docs.filter(
+                    (F.col("lang") == lang) & (F.col("doc_id") % 2 == parity)
+                ).coalesce(1).write.mode("overwrite").parquet(sub)
+                part = glob.glob(sub + "/part-*.parquet")[0]
+                dst = os.path.join(tmp, f"lang={lang}", "deep", f"docs_{pname}.parquet")
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(part, dst)
+        shutil.rmtree(os.path.join(tmp, "stage"))
+
+    return fixture_dir(table_path(sf_dir, "documents"), "doc_tree", build)
 
 
 @query(
@@ -810,47 +741,11 @@ def scan_path_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     file index before any task launches, so non-matching files cost
     zero I/O). Staged as a 2-level tree lang=*/parity-named files; the
     glob keeps only even-parity files, the WHERE keeps en/de, and the
-    oracle recomputes the same subset relationally. Per-fixture cached
-    staging keyed like _stream_dir."""
-    import hashlib
-    import uuid as _uuid
-
-    from spark_lineage_spark.tables import table_path
-
-    src_file = table_path(sf_dir, "documents")
-    st = os.stat(src_file)
-    key = hashlib.md5(
-        f"{src_file}:{st.st_size}:{st.st_mtime_ns}:tree".encode()
-    ).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"sls_doc_tree_{key}")
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        tmp = f"{root}.{os.getpid()}.{_uuid.uuid4().hex[:6]}.tmp"
-        docs = load(spark, sf_dir, "documents")
-        for lang in [r.lang for r in docs.select("lang").distinct().collect()]:  # bounded-collect-ok: language domain
-            for parity, pname in ((0, "even"), (1, "odd")):
-                sub = os.path.join(tmp, "stage", f"{lang}_{parity}")
-                docs.filter(
-                    (F.col("lang") == lang) & (F.col("doc_id") % 2 == parity)
-                ).coalesce(1).write.mode("overwrite").parquet(sub)
-                import glob as _glob
-
-                part = _glob.glob(sub + "/part-*.parquet")[0]
-                dstdir = os.path.join(tmp, f"lang={lang}", "deep")
-                os.makedirs(dstdir, exist_ok=True)
-                os.replace(part, os.path.join(dstdir, f"docs_{pname}.parquet"))
-        import shutil as _shutil
-
-        _shutil.rmtree(os.path.join(tmp, "stage"), ignore_errors=True)
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    oracle recomputes the same subset relationally."""
     scanned = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "docs_even.parquet")
-        .parquet(root)
+        .parquet(_doc_tree(spark, sf_dir))
     )
     return (
         scanned.filter(F.col("lang").isin("en", "de"))
@@ -884,18 +779,7 @@ def scan_modified_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd-parity files at a newer one; reading with modifiedAfter
     between the two epochs yields exactly the odd half, which the
     oracle recomputes relationally."""
-    # stage (or reuse) the tree, then pin parity-split mtimes
-    scan_path_glob_recursive(spark, sf_dir)
-    import hashlib
-
-    from spark_lineage_spark.tables import table_path
-
-    src_file = table_path(sf_dir, "documents")
-    st = os.stat(src_file)
-    key = hashlib.md5(
-        f"{src_file}:{st.st_size}:{st.st_mtime_ns}:tree".encode()
-    ).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"sls_doc_tree_{key}")
+    root = _doc_tree(spark, sf_dir)
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if fn == "docs_even.parquet":
@@ -930,31 +814,14 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     junk-bytes 'part-corrupt.parquet'; the oracle is the clean nation
     table, so the value hash proves the good file survived intact and
     the bad one contributed nothing."""
-    import hashlib
-
-    from spark_lineage_spark.tables import table_path
-
     src_file = table_path(sf_dir, "nation")
-    st = os.stat(src_file)
-    key = hashlib.md5(
-        f"{src_file}:{st.st_size}:{st.st_mtime_ns}:corrupt".encode()
-    ).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"sls_corrupt_dir_{key}")
-    done = os.path.join(d, "_DONE")
-    if not os.path.exists(done):
-        import shutil as _shutil
-        import uuid as _uuid
 
-        tmp = f"{d}.{os.getpid()}.{_uuid.uuid4().hex[:6]}.tmp"
-        os.makedirs(tmp, exist_ok=True)
-        _shutil.copy(src_file, os.path.join(tmp, "part-good.parquet"))
+    def build(tmp: str) -> None:
+        shutil.copy(src_file, os.path.join(tmp, "part-good.parquet"))
         with open(os.path.join(tmp, "part-corrupt.parquet"), "wb") as f:
             f.write(b"PAR1 this is not a real parquet footer")
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+
+    d = fixture_dir(src_file, "corrupt_dir", build)
     # schema supplied explicitly: INFERENCE reads every footer and the
     # corrupt one fails it even under ignoreCorruptFiles (the option
     # governs the scan, not schema discovery)
@@ -990,7 +857,7 @@ def scan_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the pruned ReadSchema in the physical plan; the DuckDB
     oracle recomputes from the flat table, proving the nested
     round-trip lost nothing."""
-    out = _tmp("orders_nested")
+    out = scratch_path("roundtrip", "orders_nested")
     o = load(spark, sf_dir, "orders")
     nested = o.select(
         "o_orderkey",
@@ -1081,7 +948,7 @@ def scan_csv_multiline_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats for 100 TB landing zones, this query is the migration
     check). Oracle recomputes the payload lengths straight from the
     source table — the round-trip must lose nothing."""
-    out = _tmp("docs_multiline_csv")
+    out = scratch_path("roundtrip", "docs_multiline_csv")
     payload = F.concat(
         F.lit('He said "'),
         F.substring("text", 1, 40),
@@ -1141,7 +1008,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     DataFrameWriter option (no session mutation). At 100 TB this is
     the difference between rewriting one day's partition and
     rewriting the lake."""
-    out = _tmp("orders_dynoverwrite")
+    out = scratch_path("roundtrip", "orders_dynoverwrite")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -1194,7 +1061,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    out = _tmp("orders_pyds_sink")
+    out = scratch_path("roundtrip", "orders_pyds_sink")
     # fresh dir per run: mode("append") + uuid part names would otherwise
     # accumulate stale (unmanifested, hence ignored — but unbounded) files
     # across repeat invocations in one process (AUDIT best-of-2, bench)
@@ -1278,7 +1145,7 @@ def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     The re-read aggregates per (status, _metadata.file_name), so the
     checked values are the REAL physical file boundaries, not writer
     bookkeeping."""
-    out = _tmp("orders_maxrec")
+    out = scratch_path("roundtrip", "orders_maxrec")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     (
         o.repartition(spark.sparkContext.defaultParallelism, "o_orderstatus")
@@ -1327,7 +1194,7 @@ def scan_partition_values_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     string-typed month would silently compare lexically and still
     work for ISO dates, but range arithmetic (BETWEEN, interval math)
     only plans correctly on the real type."""
-    out = _tmp("orders_month_part")
+    out = scratch_path("roundtrip", "orders_month_part")
     o = load(spark, sf_dir, "orders").withColumn(
         "o_month", F.date_trunc("month", "o_orderdate").cast("date")
     )
@@ -1381,7 +1248,7 @@ def scan_text_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan terms: wholetext makes each FILE the minimum split unit
     (spark.read.text normally splits large files by lines) — fine for
     many small docs, the wrong mode for a 10 GB file."""
-    out = _tmp("docs_wholetext")
+    out = scratch_path("roundtrip", "docs_wholetext")
     d = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 40)
@@ -1451,7 +1318,7 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar+zstd parquet remains the default, CSV+gzip is the
     interchange-format case. Values go through integer cents so the
     text round-trip needs no float tolerance."""
-    out = _tmp("customer_csv_gz")
+    out = scratch_path("roundtrip", "customer_csv_gz")
     c = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
@@ -1497,7 +1364,7 @@ def scan_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     same probe on the source table, so the bloom write must be
     value-preserving.  The footer property (bloom offsets present
     only when enabled) is pinned in tests/test_round9_ops.py."""
-    out = _tmp("customer_bloom")
+    out = scratch_path("roundtrip", "customer_bloom")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     (
         c.write.mode("overwrite")

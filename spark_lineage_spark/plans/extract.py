@@ -94,7 +94,7 @@ def _resolve_checkpoint_entry(key: tuple[str, int]):
         _CHECKPOINT_LINEAGE[key] = entry
         return entry
     try:
-        inputs, raw_cols, _ = analyze_plan(entry, with_columns=True, _raw=True)
+        inputs, raw_cols, _ = analyze_plan(entry, _raw=True)
         resolved = (inputs, {name: set(srcs) for name, srcs in raw_cols})
     except Exception:
         resolved = None
@@ -352,18 +352,6 @@ def _leaf_dataset(jvm, name: str) -> Optional[DatasetRef]:
     return None
 
 
-def collect_inputs(plan) -> list[DatasetRef]:
-    """Input refs only (cheaper: skips the exprId dataflow)."""
-    inputs, _, _ = analyze_plan(plan, with_columns=False)
-    return inputs
-
-
-def column_lineage(plan) -> list[ColumnLineage]:
-    """Map each output column of ``plan`` to its base input columns."""
-    _, columns, _ = analyze_plan(plan, with_columns=True)
-    return columns
-
-
 # DSv2 write plans don't follow the v1 *Command naming
 V2_WRITE_NODES = {"CreateTableAsSelect", "ReplaceTableAsSelect", "AppendData",
                   "OverwriteByExpression", "OverwritePartitionsDynamic"}
@@ -409,7 +397,7 @@ def _command_output(cmd, name: str) -> DatasetRef:
 
 
 def analyze_plan(
-    plan, with_columns: bool = True, _raw: bool = False
+    plan, _raw: bool = False
 ) -> tuple[list[DatasetRef], list, Optional[DatasetRef]]:
     """ONE tree walk producing inputs, column lineage, and (for SQL
     write commands) the output target.
@@ -508,7 +496,7 @@ def analyze_plan(
             if entry is not None:
                 ckpt_inputs, colmap = entry
                 found.extend(ckpt_inputs)
-                for a in _output(node) if with_columns else ():
+                for a in _output(node):
                     if colmap.get(a["name"]):
                         mapping[_eid(a)] = set(colmap[a["name"]])
                 return
@@ -524,15 +512,12 @@ def analyze_plan(
             elif view and not ref.name:
                 ref.name = view
             found.append(ref)
-            if with_columns:
-                label = ref.name or (ref.paths[0] if ref.paths else ref.kind)
-                for a in _output(node):
-                    mapping[_eid(a)] = {(label, a["name"])}
+            label = ref.name or (ref.paths[0] if ref.paths else ref.kind)
+            for a in _output(node):
+                mapping[_eid(a)] = {(label, a["name"])}
             return
         for ch in chs:
             walk(ch)
-        if not with_columns:
-            return
         # after children: register this node's derived expressions
         if name == "Union":
             union_by_position(_output(node), outputs_of(node.kids))
@@ -581,7 +566,7 @@ def analyze_plan(
         (a["name"], set(mapping.get(_eid(a), ()))) if _raw else ColumnLineage(
             output=a["name"],
             inputs=sorted(f"{ds}.{col}" for ds, col in mapping.get(_eid(a), ())))
-        for a in (_output(root) if with_columns else ())
+        for a in _output(root)
     ]
     return list(unique.values()), columns, output_ref[0]
 

@@ -108,47 +108,6 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Same-application entries kept per staged-DataFrame cache: a
-# long-lived session sweeping many sf_dirs (scale probe, test runs over
-# tmp fixture dirs) must not pin localCheckpoint blocks monotonically.
-STAGED_CACHE_CAP = 4
-
-
-def evict_cache(cache: dict, app: str, keep_key: tuple) -> None:
-    """Eviction policy for the session-staged DataFrame caches
-    (_SHINGLE_INDEX_CACHE and friends): drop every other-application
-    entry, then FIFO-evict same-application entries beyond
-    STAGED_CACHE_CAP (ADVICE r6 — previously only dead-app entries were
-    evicted, so every distinct (sf_dir, threshold) key accumulated a
-    checkpointed DataFrame whose blocks stayed pinned on executors).
-    Evicted DataFrames are unpersisted best-effort; dropping the
-    reference also lets the ContextCleaner release the checkpoint
-    blocks on GC.
-
-    CONSUMPTION CONTRACT (ADVICE r7): a cached staged DataFrame must be
-    consumed (actions run) within the query invocation that fetched it
-    — callers must NOT hold a fetched DF lazily across other queries,
-    because building >= STAGED_CACHE_CAP other (sf_dir, ...) keys in
-    the same application unpersists it and any later action fails on
-    released localCheckpoint blocks. Every in-repo cache site follows
-    this (the builder uses the staged DF to produce its result DF
-    within the same call); external callers reusing the caches get the
-    same rule."""
-    for k in [k for k in cache if k[0] != app]:
-        df = cache.pop(k)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    same = [k for k in cache if k[0] == app and k != keep_key]
-    while len(same) >= STAGED_CACHE_CAP:
-        df = cache.pop(same.pop(0), None)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 def build_spark(
     app_name: str = "spark_lineage_spark",
     cpus: Optional[int] = None,

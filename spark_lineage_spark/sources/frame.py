@@ -29,6 +29,8 @@ _ACTIONS = {
     "first",
     "foreach",
     "foreachPartition",
+    "isEmpty",
+    "toArrow",
 }
 
 
@@ -61,31 +63,7 @@ class LineageDataFrame:
         attr = getattr(self._df, name)
         if name in _ACTIONS and callable(attr):
             return self._wrap_action(name, attr)
-        if callable(attr):
-            def method(*args, **kwargs):
-                return self._rewrap(attr(*args, **kwargs))
-
-            return method
-        # non-callable accessors that fan out to DataFrames (na, stat)
-        return self._rewrap(attr)
-
-    def _rewrap(self, out: Any) -> Any:
-        """Keep every DataFrame-producing path inside the facade:
-        plain DataFrames, lists/tuples of them (randomSplit), and
-        intermediate holders (GroupedData, na/stat, rollup/cube)
-        whose own methods produce DataFrames."""
-        from pyspark.sql import GroupedData
-        from pyspark.sql.dataframe import DataFrameNaFunctions, DataFrameStatFunctions
-
-        if isinstance(out, DataFrame):
-            return LineageDataFrame(out, self._session)
-        if isinstance(out, (list, tuple)) and out and all(
-            isinstance(x, DataFrame) for x in out
-        ):
-            return type(out)(LineageDataFrame(x, self._session) for x in out)
-        if isinstance(out, (GroupedData, DataFrameNaFunctions, DataFrameStatFunctions)):
-            return _LineageHolder(out, self._session)
-        return out
+        return _forward(attr, self._session)
 
     def __getitem__(self, item):
         return self._df[item]
@@ -122,6 +100,8 @@ class LineageDataFrame:
                     n_rows = int(result.shape[0])
                 except Exception:
                     pass
+            elif name == "toArrow":
+                n_rows = result.num_rows
             self._session.emit(self._df, name, time.perf_counter() - t0, num_output_rows=n_rows)
             return result
 
@@ -130,21 +110,47 @@ class LineageDataFrame:
 
 class _LineageHolder:
     """Proxy for intermediate non-DataFrame holders (GroupedData,
-    na/stat function bundles): their DataFrame results re-enter the
-    facade so downstream actions still emit lineage."""
+    na/stat function bundles, cogroups): their DataFrame results, and
+    the holders they return (groupBy().pivot()), re-enter the facade so
+    downstream actions still emit lineage."""
 
     def __init__(self, inner, session: "LineageSession"):
         self._inner = inner
         self._session = session
 
     def __getattr__(self, name: str) -> Any:
-        attr = getattr(self._inner, name)
-        if callable(attr):
-            def method(*args, **kwargs):
-                out = attr(*args, **kwargs)
-                if isinstance(out, DataFrame):
-                    return LineageDataFrame(out, self._session)
-                return out
+        return _forward(getattr(self._inner, name), self._session)
 
-            return method
-        return attr
+
+def _forward(attr: Any, session: "LineageSession") -> Any:
+    """An attribute of a proxied object, with its results kept in the
+    facade: a method's return value, or the attribute itself (na, stat)."""
+    if callable(attr):
+        def method(*args, **kwargs):
+            return _rewrap(attr(*args, **kwargs), session)
+
+        return method
+    return _rewrap(attr, session)
+
+
+def _rewrap(out: Any, session: "LineageSession") -> Any:
+    """Keep every DataFrame-producing path inside the facade: plain
+    DataFrames, lists/tuples of them (randomSplit), and intermediate
+    holders (GroupedData, na/stat, cogroups) whose own methods produce
+    DataFrames."""
+    from pyspark.sql import GroupedData
+    from pyspark.sql.dataframe import DataFrameNaFunctions, DataFrameStatFunctions
+    from pyspark.sql.pandas.group_ops import PandasCogroupedOps
+
+    if isinstance(out, DataFrame):
+        return LineageDataFrame(out, session)
+    if isinstance(out, (list, tuple)) and out and all(
+        isinstance(x, DataFrame) for x in out
+    ):
+        return type(out)(LineageDataFrame(x, session) for x in out)
+    if isinstance(
+        out,
+        (GroupedData, DataFrameNaFunctions, DataFrameStatFunctions, PandasCogroupedOps),
+    ):
+        return _LineageHolder(out, session)
+    return out

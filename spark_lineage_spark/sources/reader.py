@@ -8,7 +8,7 @@ whose only job is wrapping results.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from spark_lineage_spark.sources.frame import _rewrap
 
 
 class LineageReader:
@@ -21,13 +21,9 @@ class LineageReader:
         if callable(attr):
             def method(*args, **kwargs):
                 out = attr(*args, **kwargs)
-                if isinstance(out, DataFrame):
-                    from spark_lineage_spark.sources.frame import LineageDataFrame
-
-                    return LineageDataFrame(out, self._session)
                 if out is self._reader:
                     return self  # option()/format() chain
-                return out
+                return _rewrap(out, self._session)
 
             return method
         return attr

@@ -273,6 +273,20 @@ def test_groupby_na_randomsplit_stay_in_facade(engine, sf_dir):
     parts = ldf.randomSplit([0.5, 0.5], seed=1)
     parts[0].count()
     assert len(rep.reports) == n0 + 2
+    # a holder returning a holder (pivot), two Spark 4 actions, a cogroup
+    ldf.groupBy("o_orderstatus").pivot("o_orderpriority").sum("o_totalprice").collect()
+    assert len(rep.reports) == n0 + 3
+    assert rep.last().input_names() == ["orders"]
+    table = ldf.toArrow()
+    assert len(rep.reports) == n0 + 4
+    assert rep.last().run.num_output_rows == table.num_rows
+    assert not ldf.isEmpty()
+    assert len(rep.reports) == n0 + 5
+    grouped = ldf.groupBy("o_orderstatus")
+    grouped.cogroup(grouped).applyInPandas(
+        lambda a, b: a[["o_orderstatus"]].head(1), "o_orderstatus string"
+    ).collect()
+    assert len(rep.reports) == n0 + 6
 
 
 def test_write_mode_ignore_does_not_hang(engine, sf_dir, tmp_path):
@@ -801,19 +815,19 @@ def test_lineage_column_graph_matches_ground_truth(spark, sf_dir):
 
 
 def test_fresh_run_dir_spares_live_foreign_pid(tmp_path):
-    """_fresh_run_dir must reap ONLY dead-owner siblings: a live
+    """scratch_dir must reap ONLY dead-owner siblings: a live
     foreign pid's staging and an un-pidded legacy dir both survive."""
     import subprocess
     import tempfile as tf
 
-    from spark_lineage_spark.operators.lineage_ops import _fresh_run_dir
+    from spark_lineage_spark.staging import scratch_dir
 
     child = subprocess.Popen(["sleep", "60"])
     try:
         live = tf.mkdtemp(prefix=f"sls_lineage_q_{child.pid}_")
         dead = tf.mkdtemp(prefix=f"sls_lineage_q_{2**22 + 1}_")
         legacy = tf.mkdtemp(prefix="sls_lineage_q_legacyx_")
-        mine = _fresh_run_dir("q")
+        mine = scratch_dir("lineage_q")
         assert os.path.isdir(live), "live foreign-pid dir was reaped"
         assert os.path.isdir(legacy), "legacy un-pidded dir was reaped"
         assert not os.path.isdir(dead), "dead-owner dir survived"

@@ -60,10 +60,10 @@ def test_persistent_index_scan_is_bucketed(spark):
         _shingle_index,
         llm_dedup_persistent_index,
     )
-    from spark_lineage_spark.operators.sources_sinks import _proc_suffix
+    from spark_lineage_spark.staging import table_name
 
     llm_dedup_persistent_index(spark, SF)  # stages the bucketed table
-    index = spark.table(f"sls_mhidx_{_proc_suffix(SF)}")
+    index = spark.table(table_name("mhidx", SF))
     new_bands = _band_signatures(
         _shingle_index(spark, SF).filter(F.col("doc_id") % 10 == 0)
     )

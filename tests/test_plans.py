@@ -118,11 +118,11 @@ def test_bucketed_join_eliminates_shuffle(spark):
     metastore is per-session but /tmp/sls_warehouse persists, so a
     table left by a dead session is invisible to DROP TABLE yet blocks
     CREATE with LOCATION_ALREADY_EXISTS."""
-    from spark_lineage_spark.operators.sources_sinks import _drop_table_and_location
+    from spark_lineage_spark.staging import drop_table
 
     t_o, t_li = "sls_test_orders_b", "sls_test_lineitem_b"
-    _drop_table_and_location(spark, t_o)
-    _drop_table_and_location(spark, t_li)
+    drop_table(spark, t_o)
+    drop_table(spark, t_li)
     try:
         o = load(spark, SF, "orders").select("o_orderkey", "o_totalprice")
         li = load(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
@@ -142,8 +142,8 @@ def test_bucketed_join_eliminates_shuffle(spark):
         assert "SortMergeJoin" in p
         assert not re.search(r"^\(\d+\) Exchange", p, re.M), p
     finally:
-        _drop_table_and_location(spark, t_o)
-        _drop_table_and_location(spark, t_li)
+        drop_table(spark, t_o)
+        drop_table(spark, t_li)
 
 
 def test_salted_agg_splits_hot_keys(spark):
@@ -631,10 +631,10 @@ def test_compacted_index_self_join_no_exchange(spark):
     sides read the same bucket layout (the whole point of compacting
     the unbucketed deltas back in)."""
     from spark_lineage_spark.operators.dedup import llm_dedup_index_compaction
-    from spark_lineage_spark.operators.sources_sinks import _proc_suffix
+    from spark_lineage_spark.staging import table_name
 
     llm_dedup_index_compaction(spark, SF)  # stages base+deltas+compacted
-    comp = spark.table(f"sls_mhcc_{_proc_suffix(SF)}")
+    comp = spark.table(table_name("mhcc", SF))
     a, b = comp.alias("a"), comp.alias("b")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

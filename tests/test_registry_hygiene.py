@@ -63,7 +63,7 @@ def test_evict_cache_caps_same_app_entries():
     """The staged-DataFrame caches must not grow monotonically within
     one application (ADVICE r6): other-app entries always drop, and
     same-app entries FIFO-evict beyond STAGED_CACHE_CAP."""
-    from spark_lineage_spark.session import STAGED_CACHE_CAP, evict_cache
+    from spark_lineage_spark.staging import STAGED_CACHE_CAP, evict_cache
 
     class FakeDF:
         def __init__(self):

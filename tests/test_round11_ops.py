@@ -111,8 +111,7 @@ def test_ivf_pinned_centroids_match_live_model(spark):
     assert centroid_digest(IVF_CENTROIDS_SF001) == IVF_CENTROIDS_SF001_DIGEST
 
     sf = "/root/testdata/sf0.01"
-    S._ivf_vectors(spark, sf)
-    model = S._IVF_MODEL_CACHE[(spark.sparkContext.applicationId, sf)]
+    model = S._ivf_model(spark, sf)
     live = [[float(x) for x in c] for c in model.clusterCenters()]
     assert centroid_digest(live) == IVF_CENTROIDS_SF001_DIGEST
 

@@ -655,13 +655,13 @@ def test_source_archive_moves_files(spark, sf_dir):
 
 
 def test_archive_cleanup_spares_live_foreign_pid(spark, sf_dir):
-    """The end-of-run reap must NEVER delete another LIVE process's
-    sls_arch_ staging (a concurrent bench/oracle run's inbox mid-
-    stream — the ADVICE r8 hazard).  Plant three foreign dirs: a
-    live-pid one (this test's own child), a dead-pid one, and a
-    legacy un-pidded recent one.  After a full query run the live-pid
-    and recent-legacy dirs must survive; the dead-pid dir must be
-    reaped."""
+    """The reap that runs at the query's ``scratch_dir`` call must
+    NEVER delete another LIVE process's sls_arch_ staging (a concurrent
+    bench/oracle run's inbox mid-stream).  Plant three foreign dirs: a
+    live-pid one (this test's own child), a dead-pid one, and an
+    un-pidded one, which has no owner to check and is never reaped
+    whatever its age.  After a full query run the live-pid and
+    un-pidded dirs must survive; the dead-pid dir must be reaped."""
     import subprocess
     import tempfile as tf
 
@@ -677,13 +677,13 @@ def test_archive_cleanup_spares_live_foreign_pid(spark, sf_dir):
         # typically 4M; 2**22+1 used by the existing reap tests too)
         dead_pid = 2**22 + 1
         dead_dir = tf.mkdtemp(prefix=f"sls_arch_{dead_pid}_")
-        # legacy un-pidded dir, mtime=now -> under the 1h age floor
+        # legacy un-pidded dir: no owner to check, so never reaped
         legacy_dir = tf.mkdtemp(prefix="sls_arch_legacyx_")
 
         stream_source_archive_cleanup(spark, sf_dir).collect()
 
         assert os.path.isdir(live_dir), "live foreign-pid dir was reaped"
-        assert os.path.isdir(legacy_dir), "recent legacy dir was reaped"
+        assert os.path.isdir(legacy_dir), "un-pidded dir was reaped"
         assert not os.path.isdir(dead_dir), "dead-owner dir survived"
         os.rmdir(live_dir)
         os.rmdir(legacy_dir)

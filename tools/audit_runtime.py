@@ -23,7 +23,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+    )
     args = ap.parse_args()
 
     from spark_lineage_spark.registry import load_all

@@ -130,7 +130,10 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--cpus", type=int, default=16)
+    ap.add_argument(
+        "--cpus", type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+    )
     args = ap.parse_args()
 
     from spark_lineage_spark.registry import load_all

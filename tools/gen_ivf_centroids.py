@@ -42,8 +42,7 @@ def main() -> None:
     from spark_lineage_spark.session import build_spark
 
     spark = build_spark("sls_gen_ivf", cpus=8)
-    S._ivf_vectors(spark, args.sf)
-    model = next(iter(S._IVF_MODEL_CACHE.values()))
+    model = S._ivf_model(spark, args.sf)
     cents = [[float(x) for x in c] for c in model.clusterCenters()]
     spark.stop()
 
